@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * one-time costs (codegen, session-memoized relations, IVF build),
   * pass 2 is the steady-state marginal. Exponents are reported for
   * both — α = log(t_b/t_a)/log(k_b/k_a) between consecutive scales —
-  * because for memoized families (ccCache, IVF base index,
+  * because for memoized families (dedup clusters, IVF base index,
   * tokenizedDocs) the COLD pass is the honest scaling figure while
   * the warm pass shows the service steady state.
   *

@@ -90,7 +90,7 @@ object Tables {
     * [[fixtureRoot]] (join_bucketed, scan_partitioned,
     * scan_schema_evolution, …) plus the catalog entries the bucketed
     * fixture registered — the teardown hook a long-lived service
-    * calls, mirroring `LlmOps.evictIvfCache` /
+    * calls, mirroring `LlmOps.deleteIvfScratch` /
     * `LayoutOps.evictCompactScratch` (ADVICE r10/r11: the fixture
     * family was the one scratch class with no eviction path; fixture
     * ops re-check the path on next use, so evict-then-reuse heals by

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -298,35 +298,20 @@ object EventOps extends OpModule {
   // per call. The per-session interval table (user_id, sid, s_us,
   // e_us, n_events) is exactly the session state a production
   // streaming pipeline maintains (the same 30 m sessions win_session
-  // materializes), so it follows the tokCache/gridCache discipline:
-  // session memo keyed (session, corpus), persist + count, first run
-  // pays the build (Bench pass 1 discloses it), evictable. Oracle SQL
+  // materializes), so it is a session memo ([[Memo]]). Oracle SQL
   // unchanged (self-contained) — the driver's hash gate re-proves
   // both restructured Spark sides; OperatorSpec pins restructured ≡
   // monolithic row-for-row.
-  private val sessCache =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.DataFrame]()
-
-  /** Evict this session's memoized session-interval relations. */
-  def evictSessCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|sess30|"
-    sessCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      sessCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
 
   /** Registers `graft_sess30` (user_id, sid, s_us, e_us, n_events) —
     * the materialized 30 m session-interval relation with the
     * (tus, event_id) tiebreak both consumers use. */
   private def sess30View(s: org.apache.spark.sql.SparkSession,
       d: String): Unit = {
-    Tables.events(s, d).select("user_id", "ts", "event_id")
-      .createOrReplaceTempView("graft_ev_sess30")
-    val key =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|sess30|$d"
-    val df = key.intern.synchronized(sessCache.getOrElseUpdate(key, {
-      val b = org.apache.spark.sql.graftbridge.Bridge.inlineCtes(s.sql(
+    val ev = Tables.events(s, d).select("user_id", "ts", "event_id")
+    Memo.frame("sess30", ev) {
+      ev.createOrReplaceTempView("graft_ev_sess30")
+      s.sql(
         """SELECT user_id, sid, min(tus) AS s_us, max(tus) AS e_us,
              CAST(count(*) AS BIGINT) AS n_events
            FROM (
@@ -342,12 +327,8 @@ object EventOps extends OpModule {
                      FROM graft_ev_sess30) e
                WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)
              ) flagged) sess0
-           GROUP BY user_id, sid"""))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      b.count()
-      b
-    }))
-    df.createOrReplaceTempView("graft_sess30")
+           GROUP BY user_id, sid""")
+    }.createOrReplaceTempView("graft_sess30")
   }
 
   /** Shared bounce-rate SQL (stream_bounce_rate): the win_session

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -285,23 +285,6 @@ object GraphOps extends OpModule {
     (ranks, persisted)
   }
 
-  /** Session-scoped memo of the converged rank table, keyed
-    * (session, corpus) — the [[PipelineOps.ccCache]] pattern: the
-    * memo persists its OWN flat copy, then frees the loop's final
-    * round so no unreachable cache entry outlives the build. */
-  private val prCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's memoized rank tables — companion to
-    * [[PipelineOps.evictCcCache]] for a long-lived service. */
-  def evictPrCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|"
-    prCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      prCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
   /** DuckDB oracle SQL for `graph_hits_fixed` — the 5-round HITS
     * chain in order-independent arithmetic (DECIMAL(38,10) score
     * sums, one IEEE max-division per round re-quantized at 10dp).
@@ -421,64 +404,14 @@ object GraphOps extends OpModule {
     sb.toString
   }
 
-  /** Session-scoped memo of the support-filtered co-occurrence edge
-    * list, keyed (session, corpus) — the triangle join references the
-    * edge relation THREE times, and Spark's ReusedExchange only
-    * de-duplicates the shuffle write: each reference re-runs the
-    * final pair aggregation over ~|pairs| shuffled rows. Persisting
-    * the (tiny, support-thresholded) edge list turns the three
-    * references into three InMemoryTableScans of a few thousand
-    * rows. The production analogue is a materialized edge table
-    * derived once per corpus snapshot; [[evictTriCache]] is the
-    * long-lived-service teardown. */
-  private val triEdgeCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Session-scoped memo of the converged k-core membership table —
-    * the [[prCache]] pattern: the peel is iterative, its result is a
-    * reusable filter artifact, and a long-lived service rebuilds it
-    * per corpus snapshot. */
-  private val kcoreCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's memoized k-core tables. */
-  def evictKcoreCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|kcore|"
-    kcoreCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      kcoreCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** Session-scoped memo of the supplier-graph component labels —
-    * the [[kcoreCache]] pattern: CC is a multi-round iterative build
-    * whose label table is the reusable artifact. */
-  private val ccLabelCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's memoized component-label tables. */
-  def evictCcLabelCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|cc|"
-    ccLabelCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      ccLabelCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** Evict this session's memoized edge lists. */
-  def evictTriCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|tri|"
-    triEdgeCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      triEdgeCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
   /** The session-memoized support-filtered supplier co-occurrence
     * edge list (s1 < s2; adjacent = ≥ 6 shared orders) — built once
     * per (session, corpus) and shared by [[graph_triangle_count]]'s
     * three-way join and [[graph_reachability]]'s BFS (one derivation,
-    * two graph algorithms — the materialized-edge-table discipline).
+    * two graph algorithms — the materialized-edge-table discipline;
+    * ReusedExchange would share only the shuffle write, each of the
+    * triangle join's three references would re-run the final pair
+    * aggregation).
     * Pair generation avoids the textbook self-join: each order's
     * distinct supplier set collapses in ONE map-combined collect_set
     * aggregate and the a<b pairs expand from the sorted array in the
@@ -487,10 +420,9 @@ object GraphOps extends OpModule {
     */
   private[graft] def supportEdges(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
-    val ekey =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|tri|$d"
-    ekey.intern.synchronized(triEdgeCache.getOrElseUpdate(ekey, {
-      val pairs = Tables.lineitem(s, d)
+    val li = Tables.lineitem(s, d)
+    Memo.frame("suppedges", li) {
+      val pairs = li
         .groupBy("l_orderkey")
         .agg(array_sort(collect_set(col("l_suppkey"))).as("supps"))
         .filter(size(col("supps")) >= 2)
@@ -499,16 +431,13 @@ object GraphOps extends OpModule {
              transform(slice(supps, i + 2, size(supps)),
                        y -> struct(x AS s1, y AS s2))))""")).as("p"))
         .select(col("p.s1").as("s1"), col("p.s2").as("s2"))
-      val edges = pairs.groupBy("s1", "s2")
+      pairs.groupBy("s1", "s2")
         .agg(count(lit(1)).as("c"))
         .filter(col("c") >= 6)
         // r15: keep the support count — graph_sssp derives edge
         // weights from it; every other consumer projects it away
         .select("s1", "s2", "c")
-        .persist()
-      edges.count()
-      edges
-    }))
+    }
   }
 
   /** The session-memoized PART co-occurrence edge list (p1 < p2) —
@@ -535,10 +464,9 @@ object GraphOps extends OpModule {
     */
   private[graft] def partEdges(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
-    val ekey =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|pedge|$d"
-    ekey.intern.synchronized(triEdgeCache.getOrElseUpdate(ekey, {
-      val pairs = Tables.lineitem(s, d)
+    val li = Tables.lineitem(s, d)
+    Memo.frameFreeing("partedges", li) {
+      val pairs = li
         .groupBy("l_orderkey")
         .agg(array_sort(collect_set(col("l_partkey"))).as("parts"))
         .filter(size(col("parts")) >= 2)
@@ -552,15 +480,11 @@ object GraphOps extends OpModule {
         .persist()
       val stats = counted.agg(sum(col("c")).as("sum_c"),
         count(lit(1)).as("n_pairs"))
-      val edges = counted.crossJoin(broadcast(stats))
+      (counted.crossJoin(broadcast(stats))
         .filter(col("c") >=
           expr("greatest(CAST(2 AS BIGINT), (2 * sum_c) DIV n_pairs)"))
-        .select("s1", "s2")
-        .persist()
-      edges.count()
-      counted.unpersist(blocking = false)
-      edges
-    }))
+        .select("s1", "s2"), Seq(counted))
+    }
   }
 
   override def ops: Seq[Op] = Seq(
@@ -575,18 +499,9 @@ object GraphOps extends OpModule {
       // GraphSpec pins the kernel against a hand-computed reference
       // on a crafted graph and mass conservation on this one.
       (s, d) => {
-        // "|pr|" namespace: interned-string key locks collide ACROSS
-        // memos when two caches intern the same key text (prCache and
-        // Pq.rotCache both built "$sid|$d" — ADVICE r10 item 3)
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|pr|$d"
-        // key-scoped lock: TrieMap.getOrElseUpdate can run two
-        // concurrent builders and drop the loser's PERSISTED frame
-        // with no reachable reference (the ivfBaseDirCache race,
-        // ADVICE r9) — serialize per key so exactly one loop builds
-        val ranks = key.intern.synchronized(prCache.getOrElseUpdate(key, {
-          val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-          val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
+        val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        val ranks = Memo.frameFreeing("pr", li, o) {
           val trade = li.join(o, li("l_orderkey") === o("o_orderkey"))
             .select((col("o_custkey") * 2).as("c"),
               (col("l_suppkey") * 2 + 1).as("p"))
@@ -594,11 +509,8 @@ object GraphOps extends OpModule {
           val edges = trade.select(col("c").as("src"), col("p").as("dst"))
             .unionByName(trade.select(col("p").as("src"), col("c").as("dst")))
           val (df, handle) = pageRankWithHandle(edges, iters = 5)
-          val r = df.persist()
-          r.count()
-          handle.unpersist(blocking = false)
-          r
-        }))
+          (df, Seq(handle))
+        }
         ranks
           .select(col("node"),
             when(col("node") % 2 === 0, lit("customer"))
@@ -626,42 +538,33 @@ object GraphOps extends OpModule {
       // fixed 5-stage chain.
       (s, d) => {
         // converged SCORES are session-memoized like graph_hits_fixed
-        // (the prCache pattern — the r19 verdict's one unplayed memo):
-        // the 5-round DECIMAL chain is a per-corpus build artifact, so
-        // warm calls read the 20-row cached relation instead of
-        // re-executing five join+agg stages; the cold pass discloses
-        // the chain build exactly as hits_fixed does. The memo holds
-        // the chain's OUTPUT, so the edge relation below stays a
-        // build-local persist freed once the scores materialize.
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|prfixed|$d"
-        val scores = key.intern.synchronized(prCache.getOrElseUpdate(key, {
-          val ekey =
-            s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|predges|$d"
-          val edges = ekey.intern.synchronized(prCache.getOrElseUpdate(ekey, {
-            val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-            val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
-            val trade = li.join(o, li("l_orderkey") === o("o_orderkey"))
-              .select((col("o_custkey") * 2).as("c"),
-                (col("l_suppkey") * 2 + 1).as("p"))
-              .distinct()
-            val edges0 = trade.select(col("c").as("src"), col("p").as("dst"))
-              .unionByName(trade.select(col("p").as("src"), col("c").as("dst")))
-            // loop-invariant outdeg attached ONCE (the float kernel's
-            // degree-join hoist) — per-round work drops to one join
-            val e = edges0
-              .withColumn("outdeg",
-                count(lit(1)).over(org.apache.spark.sql.expressions.Window
-                  .partitionBy("src")).cast("long"))
-              .persist()
-            e.count()
-            e
-          }))
+        // (the r19 verdict's one unplayed memo): the 5-round DECIMAL
+        // chain is a per-corpus build artifact, so warm calls read the
+        // 20-row cached relation instead of re-executing five join+agg
+        // stages; the cold pass discloses the chain build exactly as
+        // hits_fixed does. The memo holds the chain's OUTPUT, so the
+        // edge relation below stays a build-local persist freed once
+        // the scores materialize.
+        val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
+        val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        val scores = Memo.frameFreeing("prfixed", li, o) {
+          val trade = li.join(o, li("l_orderkey") === o("o_orderkey"))
+            .select((col("o_custkey") * 2).as("c"),
+              (col("l_suppkey") * 2 + 1).as("p"))
+            .distinct()
+          val edges0 = trade.select(col("c").as("src"), col("p").as("dst"))
+            .unionByName(trade.select(col("p").as("src"), col("c").as("dst")))
+          // loop-invariant outdeg attached ONCE (the float kernel's
+          // degree-join hoist) — per-round work drops to one join
+          val edges = edges0
+            .withColumn("outdeg",
+              count(lit(1)).over(org.apache.spark.sql.expressions.Window
+                .partitionBy("src")).cast("long"))
+            .persist()
+          edges.count()
           edges.createOrReplaceTempView("graft_pr_edges")
-          val r = s.sql(pageRankFixedSql(sparkSide = true)).persist()
-          r.count()
-          r
-        }))
+          (s.sql(pageRankFixedSql(sparkSide = true)), Seq(edges))
+        }
         // re-sort the 20-row cached relation: InMemoryTableScan does
         // not guarantee the pre-cache sort order on read
         scores.orderBy(col("pr").desc, col("node").asc)
@@ -686,20 +589,14 @@ object GraphOps extends OpModule {
       // the pageRankWithHandle persist/rewrap discipline bounds the
       // plan depth. Session-memoized per (session, corpus).
       (s, d) => {
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|hits|$d"
-        val scores = key.intern.synchronized(prCache.getOrElseUpdate(key, {
-          val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-          val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
+        val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        val scores = Memo.frameFreeing("hits", li, o) {
           val edges = li.join(o, li("l_orderkey") === o("o_orderkey"))
             .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
             .distinct()
-          val (df, handles) = hitsWithHandle(edges, iters = 5)
-          val r = df.persist()
-          r.count()
-          handles.foreach(_.unpersist(blocking = false))
-          r
-        }))
+          hitsWithHandle(edges, iters = 5)
+        }
         scores.orderBy(col("auth").desc, col("supplier").asc).limit(20)
       },
       None),
@@ -728,28 +625,23 @@ object GraphOps extends OpModule {
       // aggregate + a 1-row broadcast — the float form's exact plan
       // shape. The final scores are session-memoized per
       // (session, corpus) like graph_hits/graph_pagerank (the
-      // prCache pattern, build disclosed in the cold pass): the
+      // build disclosed in the cold pass): the
       // returned frame must stay collectable after the per-round
       // caches are freed, and an unpersisted lazy chain would
       // recompute with the duplicated-tree shape. GraphSpec pins
       // fixed ≡ float on the authority ordering; PlanSpec pins the
       // chain window-free.
       (s, d) => {
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|hitsfixed|$d"
-        val scores = key.intern.synchronized(prCache.getOrElseUpdate(key, {
-          val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
-          val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
+        val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
+        val scores = Memo.frameFreeing("hitsfixed", li, o) {
           val e = li.join(o, li("l_orderkey") === o("o_orderkey"))
             .select(col("o_custkey").as("src"), col("l_suppkey").as("dst"))
             .distinct().persist()
           e.count()
           val (df, handles) = hitsFixedWithHandle(e, rounds = 5)
-          val r = df.persist()
-          r.count()
-          (e +: handles).foreach(_.unpersist(blocking = false))
-          r
-        }))
+          (df, e +: handles)
+        }
         scores.orderBy(col("auth").desc, col("supplier").asc).limit(20)
       },
       Some(hitsFixedSql())),
@@ -1010,15 +902,14 @@ object GraphOps extends OpModule {
         // (session, corpus) like the rank/edge tables — it IS the
         // reusable artifact (the cohesion filter downstream jobs
         // join against), rebuilt when the corpus snapshot changes.
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|kcore|$d"
-        val surv = key.intern.synchronized(kcoreCache.getOrElseUpdate(key, {
+        val part = Tables.part(s, d)
+        val surv = Memo.frameFreeing("kcore", Tables.lineitem(s, d), part) {
           def rewrap(df: DataFrame): DataFrame =
             org.apache.spark.sql.graftbridge.Bridge.rewrapInternal(df)
           val e = partEdges(s, d)
           val ud = e.select(col("s1").as("src"), col("s2").as("dst"))
             .unionByName(e.select(col("s2").as("src"), col("s1").as("dst")))
-          val n = Scale.frontierPartitions(Tables.part(s, d))
+          val n = Scale.frontierPartitions(part)
           val udp = ud.repartition(n, col("src")).persist()
           val k = 3
           var persisted = udp.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -1048,8 +939,8 @@ object GraphOps extends OpModule {
             alive = flat
           }
           udp.unpersist(blocking = false)
-          alive
-        }))
+          (alive, Seq(persisted))
+        }
         surv.orderBy("node")
       },
       Some("""WITH p AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -1097,18 +988,13 @@ object GraphOps extends OpModule {
       // rank/edge/membership tables; the oracle is the recursive
       // min-label closure.
       (s, d) => {
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|cc|$d"
-        val lbl = key.intern.synchronized(ccLabelCache.getOrElseUpdate(key, {
+        val lbl = Memo.frameFreeing("cclabels", Tables.lineitem(s, d)) {
           val pairs = supportEdges(s, d)
             .select(col("s1").as("doc_a"), col("s2").as("doc_b"))
           val (labels, handle) =
             PipelineOps.connectedComponentsWithHandle(pairs)
-          val r = labels.persist()
-          r.count()
-          handle.unpersist(blocking = false)
-          r
-        }))
+          (labels, Seq(handle))
+        }
         val wc = org.apache.spark.sql.expressions.Window
           .partitionBy("component")
         Tables.supplier(s, d)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,23 +17,6 @@ import org.apache.spark.sql.functions._
   * distributed as-of operator would produce.
   */
 object Joins extends OpModule {
-
-  /** Session-scoped memo of the converged ER golden-record table —
-    * the [[PipelineOps]] ccCache pattern: the closure is an iterative
-    * multi-job build and its cluster table is the reusable
-    * master-data artifact. One bounded (vocabulary-sized) entry per
-    * (session, corpus). */
-  private val erCache =
-    scala.collection.concurrent.TrieMap[String, org.apache.spark.sql.DataFrame]()
-
-  /** Evict this session's memoized ER cluster tables. */
-  def evictErCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|ercl|"
-    erCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      erCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
 
   override def ops: Seq[Op] = Seq(
 
@@ -1116,18 +1099,14 @@ object Joins extends OpModule {
       // 100 TB the name relation is orders smaller than the table
       // and pairs are blocked, never all-pairs.
       (s, d) => {
-        // the converged cluster table is session-memoized per
-        // (session, corpus) — the ccCache/prCache discipline: the CC
-        // closure is a multi-round iterative build whose golden-record
-        // table IS the reusable master-data artifact a long-lived
-        // service re-reads per lookup; warm calls read the bounded
+        // the converged cluster table is the reusable master-data
+        // artifact a long-lived service re-reads per lookup, so it is
+        // a session memo: warm calls read the bounded
         // (vocabulary-sized) cached relation instead of re-running the
-        // propagation loop's per-round jobs. Cold pass discloses the
-        // build; [[evictErCache]] is the service teardown.
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|ercl|$d"
-        val golden = key.intern.synchronized(erCache.getOrElseUpdate(key, {
-          val names = Tables.part(s, d)
+        // propagation loop's per-round jobs
+        val part = Tables.part(s, d)
+        val golden = Memo.frameFreeing("ercl", part) {
+          val names = part
             .groupBy(col("p_name")).agg(count(lit(1)).as("n_rows"))
             .withColumn("blk", expr("split_part(p_name, ' ', 2)"))
           val a = names.select(col("p_name").as("name_a"), col("blk"))
@@ -1148,14 +1127,10 @@ object Joins extends OpModule {
             .agg(min(col("p_name")).as("cluster"),
               count(lit(1)).as("cluster_size"),
               sum(col("n_rows")).as("total_rows"))
-          val r = lab.join(byComp, Seq("comp"))
+          (lab.join(byComp, Seq("comp"))
             .select(col("p_name"), col("cluster"),
-              col("cluster_size"), col("total_rows"))
-            .persist()
-          r.count()
-          handle.unpersist(blocking = false)
-          r
-        }))
+              col("cluster_size"), col("total_rows")), Seq(handle))
+        }
         golden.orderBy("p_name")
       },
       Some("""WITH RECURSIVE names AS (

@@ -442,7 +442,7 @@ object LayoutOps extends OpModule {
   }
 
   /** Delete this session's `layout_compact` scratch dirs — teardown
-    * for a long-lived service, mirroring `LlmOps.evictIvfCache`. */
+    * for a long-lived service, mirroring `LlmOps.deleteIvfScratch`. */
   def evictCompactScratch(spark: org.apache.spark.sql.SparkSession): Unit = {
     // the scratch lives under Tables.fixtureRoot(_, _, "compact_demo")
     // = /tmp/graft_fixtures/compact_demo/<sid>/<corpus-digest> (the

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import graft.functions.SeededFnvHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -818,10 +818,7 @@ object LlmOps extends OpModule {
   // likewise rebuilt their per-doc fingerprint / per-vector
   // projection relations. These are exactly the structures a
   // production dedup/ANN pipeline maintains INCREMENTALLY as a
-  // signature index (the ivfCache / tokCache analogue), so they are
-  // session-memoized per (session, corpus) with the established
-  // discipline: key-scoped lock, persist + count() to materialize,
-  // cold pass discloses the build (Bench pass 1 pays it), evictable.
+  // signature index, so they are session memos ([[Memo]]).
   // The DuckDB oracle SQL is UNCHANGED and self-contained — the
   // driver's hash gate re-proves the restructured Spark side against
   // the identical oracle relation, and LlmSpec pins restructured ≡
@@ -832,45 +829,6 @@ object LlmOps extends OpModule {
   // per-query work left is banding projections plus the candidate and
   // confirm equi-joins, which is the marginal cost an incremental
   // signature index gives a production pipeline on every batch.
-  private val md5TwinCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's memoized twin signature relations —
-    * companion to [[evictTokCache]] / [[evictIvfCache]]. */
-  def evictMd5TwinCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|md5t|"
-    md5TwinCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      md5TwinCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** The memo core: build → inline CTEs → persist → materialize,
-    * once per (session, corpus, tag); returns the persisted frame for
-    * DataFrame-API consumers. */
-  private def md5TwinMemoDf(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, tag: String)(build: => DataFrame): DataFrame = {
-    val key = s"${org.apache.spark.sql.graftbridge.Bridge
-      .sessionUUID(spark)}|md5t|$tag|$sfDir"
-    key.intern.synchronized(md5TwinCache.getOrElseUpdate(key, {
-      // r22: persist + register the CTE-INLINED form. A `WITH`-clause
-      // build stores a WithCTE plan in the temp view, and CTE def ids
-      // renumber relative to each consumer during normalization, so
-      // CacheManager's fragment walk never matches the embedded view
-      // against the standalone cache key — the memo silently misses
-      // (exactly the r21 simhash/lsh defect: warm ≈ cold, no
-      // InMemoryRelation in the plan). The near/incr builds worked
-      // only because they happened to be CTE-free.
-      val b = org.apache.spark.sql.graftbridge.Bridge.inlineCtes(build)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      b.count()
-      b
-    }))
-  }
-
-  private def md5TwinMemo(spark: org.apache.spark.sql.SparkSession,
-      sfDir: String, tag: String, view: String)(build: => DataFrame): Unit =
-    md5TwinMemoDf(spark, sfDir, tag)(build).createOrReplaceTempView(view)
 
   // shared fragments for the restructured Spark sides — same
   // constants/arithmetic as the monolithic builders above (drift is
@@ -922,9 +880,9 @@ object LlmOps extends OpModule {
     * re-proves against the string-joining oracle on every run). */
   private def minhashTwinViews(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Unit = {
-    Tables.documents(spark, sfDir).select("doc_id", "text")
-      .createOrReplaceTempView("graft_md5twin_docs")
-    md5TwinMemo(spark, sfDir, "sh", "graft_md5sh_base") {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val sh = Memo.frame("md5sh", docs) {
+      docs.createOrReplaceTempView("graft_md5twin_docs")
       spark.sql(s"""
         SELECT /*+ REPARTITION(doc_id) */ src, doc_id,
           xxhash64(sh) AS xx, ${md5X32("md5(sh)")} AS x
@@ -940,12 +898,14 @@ object LlmOps extends OpModule {
                         SELECT 1 AS src, doc_id, $SparkCloneText AS text
                           FROM graft_md5twin_docs) r) t) s0) s1""")
     }
-    md5TwinMemo(spark, sfDir, "sig", "graft_md5sig_base") {
+    Memo.frame("md5sig", docs) {
+      sh.createOrReplaceTempView("graft_md5sh_base")
       spark.sql(s"""
         SELECT /*+ REPARTITION(doc_id) */ src, doc_id, $minhashMinCols,
           count(*) AS n_sh
         FROM graft_md5sh_base GROUP BY src, doc_id""")
-    }
+    }.createOrReplaceTempView("graft_md5sig_base")
+    sh.createOrReplaceTempView("graft_md5sh_base")
   }
 
   /** Restructured Spark side of `llm_dedup_near_md5` over the
@@ -1510,13 +1470,15 @@ object LlmOps extends OpModule {
       col("fp"))
   }
 
-  /** r22: the memoized corpus winnow index ([[md5TwinMemoDf]]
-    * discipline) — shared by `llm_winnow_pairs` per call and by both
-    * boilerplate-rank cold builds, which previously each re-ran the
-    * kernel + fp exchange over the full corpus. */
+  /** r22: the memoized corpus winnow index ([[Memo]]) — shared by
+    * `llm_winnow_pairs` per call and by both boilerplate-rank cold
+    * builds, which previously each re-ran the kernel + fp exchange
+    * over the full corpus. */
   private def winnowPostings(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame =
-    md5TwinMemoDf(s, d, "wfp")(winnowPostingsOf(Tables.documents(s, d)))
+      d: String): DataFrame = {
+    val docs = Tables.documents(s, d)
+    Memo.frame("wfp", docs)(winnowPostingsOf(docs))
+  }
 
   private def winnowPairsFrom(f: DataFrame): DataFrame =
     f.groupBy("fp")
@@ -1551,18 +1513,6 @@ object LlmOps extends OpModule {
     * |edges|-bounded per round — both layers' own 100 TB stories
     * compose unchanged.
     */
-  private val wrankCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's memoized boilerplate-rank tables. */
-  def evictWrankCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|wrank|"
-    wrankCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      wrankCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
   /** Shared SQL for `llm_boilerplate_rank_fixed` — the hash-gated
     * twin of [[boilerplateRank]], composing TWO already-proven
     * disciplines: the winnow-pair edge layer is portable md5
@@ -1642,7 +1592,10 @@ object LlmOps extends OpModule {
   private[graft] def boilerplateRank(docs: DataFrame,
       minShared: Long = 2L, iters: Int = 5,
       cacheKey: Option[String] = None): DataFrame = {
-    def build(): DataFrame = {
+    // the result is a persisted flat copy; the loop's final round is
+    // freed once it is materialized, so no unreachable cache entry
+    // outlives the build
+    def build(): (DataFrame, Seq[DataFrame]) = {
       val e = winnowPairsOf(docs).filter(col("n_shared") >= minShared)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val edges = e.unionByName(
@@ -1650,22 +1603,17 @@ object LlmOps extends OpModule {
       val deg = edges.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("degree"))
       val (ranks, handle) = GraphOps.pageRankWithHandle(edges, iters = iters)
-      // the prCache discipline: persist OUR flat copy, then free the
-      // loop's final round so no unreachable cache entry outlives it
-      val out = ranks.join(deg, "node")
+      (ranks.join(deg, "node")
         .select(col("node").as("doc_id"), col("degree"),
-          round(col("pr"), 6).as("pr"))
-        .persist()
-      out.count()
-      handle.unpersist(blocking = false)
-      out
+          round(col("pr"), 6).as("pr")), Seq(handle))
     }
     cacheKey match {
-      case Some(k) =>
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(docs.sparkSession)}|wrank|$k"
-        key.intern.synchronized(wrankCache.getOrElseUpdate(key, build()))
-      case None => build()
+      case Some(_) => Memo.frameFreeing(s"wrank|s$minShared|i$iters", docs)(build())
+      case None =>
+        val (out, scratch) = build()
+        out.persist().count()
+        scratch.foreach(_.unpersist(blocking = false))
+        out
     }
   }
 
@@ -1724,17 +1672,10 @@ object LlmOps extends OpModule {
     // assignment is the in-session stand-in for re-writing the
     // cid-partitioned corpus table with the split ids.
     val refined = cacheKey match {
-      case Some(k) =>
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(emb.sparkSession)}|ssplit|$k|m$maxClusterSize"
-        key.intern.synchronized(semSplitCache.getOrElseUpdate(key, {
-          val df = subSplitAssign(idx.assign, maxClusterSize)
-          // no-op result IS the ivf cache's persisted relation —
-          // persisting it again would double the block-manager
-          // footprint for identical bits
-          if (df eq idx.assign) df
-          else { val p = df.persist(); p.count(); p }
-        }))
+      // a no-op split returns the index's own cached assignment, whose
+      // persist is then a CacheManager no-op (one cached copy)
+      case Some(_) => Memo.frame(s"ssplit|m$maxClusterSize", emb)(
+        subSplitAssign(idx.assign, maxClusterSize))
       case None => subSplitAssign(idx.assign, maxClusterSize)
     }
     // norms once per vector; the pairwise hot loop is one codegen dot
@@ -1752,20 +1693,6 @@ object LlmOps extends OpModule {
     idx.assign.select(col("vec_id"))
       .join(dropped.withColumn("hit", lit(true)), Seq("vec_id"), "left")
       .select(col("vec_id"), coalesce(col("hit"), lit(false)).as("is_dup"))
-  }
-
-  /** Session cache for [[semDedup]]'s sub-split assignments — keyed
-    * (sessionUUID, corpus key, cap) like [[ivfCache]]. */
-  private val semSplitCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's cached sub-split assignments. */
-  def evictSemSplitCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|ssplit|"
-    semSplitCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      semSplitCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
   }
 
   /** Oversized-cluster sub-split — the skew/size guard for cluster-
@@ -2211,20 +2138,13 @@ object LlmOps extends OpModule {
   private[graft] case class IvfIdx(cids: Seq[Long], cents: Seq[Seq[Double]],
       alphaMax: Seq[Double], assign: DataFrame)
 
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap[String, IvfIdx]()
-
-  private val tokCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   /** Session-memoized tokenized corpus — ONE row per document:
     * (doc_id, lang, toks ARRAY<STRING>), where toks is the shared
     * [[tokens]] normalization. Five registered text queries
     * (llm_tfidf, llm_bm25, llm_bigram_lm, llm_cooccur_lift,
     * llm_ngrams_tf) previously each re-ran scan → regexp-normalize →
-    * split over the whole corpus; they now all read this one persisted
-    * relation (the ccCache pattern: key-scoped lock, count() to
-    * materialize, evictable via [[evictTokCache]]).
+    * split over the whole corpus; they now all read this one session
+    * memo ([[Memo]]).
     *
     * Shape notes for 100 TB: the compact array form is deliberately
     * the DOC-grain relation, not exploded (doc_id, term) rows — no
@@ -2238,28 +2158,9 @@ object LlmOps extends OpModule {
     */
   private[ops] def tokenizedDocs(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame = {
-    val key =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|tok|$sfDir"
-    // namespaced key ("|tok|") — interned-string locks collide across
-    // memos when two caches build the same key text (the prCache /
-    // rotCache ADVICE r10 collision)
-    key.intern.synchronized(tokCache.getOrElseUpdate(key, {
-      val df = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("lang"), tokens(col("text")).as("toks"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df.count()
-      df
-    }))
-  }
-
-  /** Evict this session's memoized tokenized corpus — companion to
-    * [[evictIvfCache]] / [[PipelineOps.evictCcCache]]. */
-  def evictTokCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix =
-      s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|tok|"
-    tokCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      tokCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
+    val docs = Tables.documents(spark, sfDir)
+    Memo.frame("tok", docs)(
+      docs.select(col("doc_id"), col("lang"), tokens(col("text")).as("toks")))
   }
 
   /** Memoized ON-DISK base-index dirs for the registered maintenance
@@ -2287,7 +2188,7 @@ object LlmOps extends OpModule {
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Per-run maintenance-cycle scratch dirs (`sessionPrefix|run=dir`),
-    * deleted on [[evictIvfCache]]: each run's grown clone is left on
+    * deleted on [[deleteIvfScratch]]: each run's grown clone is left on
     * disk only until the session tears down. */
   private val ivfRunDirs =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -2314,25 +2215,22 @@ object LlmOps extends OpModule {
 
   private[graft] def ivfIndex(emb: DataFrame, nCentroids: Int,
       cacheKey: Option[String], trainOn: Option[DataFrame] = None): IvfIdx = {
-    // Cache lifetime contract (ADVICE r3): the assignment DataFrame is
-    // persisted ONLY on the keyed path, where the entry — keyed by
-    // (session-identity, corpus key, C) — lives for the session and is
-    // the in-session stand-in for a cid-partitioned corpus table. The
-    // keyed cache assumes an immutable corpus per key (true for the
-    // driver's parquet fixtures); a changed corpus needs a new key.
-    // The anonymous path persists nothing, so repeated un-keyed calls
-    // cannot leak block-manager memory.
-    def build(persist: Boolean): IvfIdx = {
+    // The keyed path is a session memo ([[Memo]]): the coarse
+    // quantizer is a driver value and the corpus assignment a
+    // persisted frame, the in-session stand-in for a cid-partitioned
+    // corpus table. The anonymous path persists nothing, so repeated
+    // un-keyed calls cannot leak block-manager memory.
+    val inputs = emb +: trainOn.toSeq
+    def build(keep: DataFrame => DataFrame): IvfIdx = {
       // trainOn: optionally learn the centroids from a bounded sample
       // while still assigning the FULL corpus — the PQ-codebook
       // discipline applied to the coarse quantizer (semDedup uses it;
       // search quality only needs centroids that SHAPE the space)
       val (cids, cents) =
         collectCentroids(lloydCentroids(trainOn.getOrElse(emb), nCentroids))
-      val assign0 = assignTo(emb, cids, cents)
+      val assign = keep(assignTo(emb, cids, cents)
         .select(col("vec_id"), col("e"), col("cid"),
-          acos(col("c_sim")).as("alpha"))
-      val assign = if (persist) assign0.cache() else assign0
+          acos(col("c_sim")).as("alpha")))
       val am = assign.groupBy("cid").agg(max("alpha").as("alpha_max"))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       // an empty bucket (possible only with duplicate seed vectors)
@@ -2340,23 +2238,9 @@ object LlmOps extends OpModule {
       IvfIdx(cids, cents, cids.map(am.getOrElse(_, 0.0)), assign)
     }
     cacheKey match {
-      case Some(k) =>
-        // keyed on sessionUUID (ADVICE r4): collision-free, unlike
-        // identityHashCode, and never aliases another live session's
-        // cached assignment
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(emb.sparkSession)}|$k|c$nCentroids"
-        val hit = ivfCache.contains(key)
-        val idx = ivfCache.getOrElseUpdate(key, build(persist = true))
-        // stderr, not stdout (Bench's stdout is one parsed JSON line):
-        // the same memo discipline as the ivf_append base-index line —
-        // a bench capture can tell "memo missed → this run paid the
-        // centroid train + assignment" from "box slow" (VERDICT r16 #6:
-        // llm_simsearch's r15 warm-inversion cost a verdict cycle to
-        // exactly this question)
-        Console.err.println(s"graft: ivf index memo " +
-          s"${if (hit) "HIT" else "MISS (built this run)"} key=$k|c$nCentroids")
-        idx
-      case None => build(persist = false)
+      case Some(_) => Memo.value(s"ivf|c$nCentroids", inputs: _*)(
+        build(a => Memo.frame(s"ivfassign|c$nCentroids", inputs: _*)(a)))
+      case None => build(identity)
     }
   }
 
@@ -2465,13 +2349,11 @@ object LlmOps extends OpModule {
     } finally batch.unpersist(blocking = false)
   }
 
-  /** Evict and unpersist every cached IVF index for `spark` — the
-    * teardown hook for a long-lived service embedding this library. */
-  def evictIvfCache(spark: org.apache.spark.sql.SparkSession): Unit = {
+  /** Delete this session's IVF maintenance scratch dirs (the memoized
+    * base indexes and every run's clone) — the teardown hook for a
+    * long-lived service embedding this library. */
+  def deleteIvfScratch(spark: org.apache.spark.sql.SparkSession): Unit = {
     val prefix = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|"
-    ivfCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      ivfCache.remove(k).foreach(_.assign.unpersist(blocking = false))
-    }
     // best-effort scratch cleanup; clones hold their own hardlinks so
     // deleting the base never invalidates an in-flight run
     def rmTree(d: String): Unit = {
@@ -2680,6 +2562,25 @@ object LlmOps extends OpModule {
     toked.select(col("doc_id"), sh.as("sh"))
   }
 
+  /** The non-empty sorted shingle sets, shuffled on doc_id — the base
+    * both prefix joins ([[jaccardPairs]], [[containmentPairs]]) read
+    * four times. With a `cacheKey` it is the PPJoin index base a
+    * production dedup service maintains per corpus snapshot, a session
+    * memo ([[Memo]]) keyed on `docs`, and the per-call work becomes
+    * postings + candidate join + exact confirm; without one (tests,
+    * ad-hoc inputs) it stays the lazy r12 exchange-reuse form. */
+  private def sortedShingles(docs: DataFrame, shingleN: Int,
+      sized: Option[Int], cacheKey: Option[String]): DataFrame = {
+    def build = Scale.repartitionSized(sized,
+      shingleSets(docs, shingleN)
+        .filter(col("doc_id").isNotNull && col("sh").isNotNull &&
+          size(col("sh")) > 0), col("doc_id"))
+    cacheKey match {
+      case Some(_) => Memo.frame(s"shsets$shingleN", docs)(build)
+      case None => build
+    }
+  }
+
   /** Prefix-filter postings: the first |s| − ⌈τ·|s|⌉ + 1 shingles of
     * each doc, exploded to (doc_id, shingle) rows.
     */
@@ -2726,21 +2627,7 @@ object LlmOps extends OpModule {
     // widening this materialization point AND the candidate-join
     // exchanges below once the corpus outgrows the session default.
     val sized = Scale.sizedShuffle(docs)
-    // r22: with a cacheKey the shingle-set relation follows the
-    // session memo discipline (it is the PPJoin inverted-index base a
-    // production dedup service maintains per corpus snapshot) — the
-    // per-call work becomes postings + candidate join + exact
-    // confirm; without one (tests, ad-hoc inputs) the r12
-    // exchange-reuse form is unchanged.
-    def sortedBuild = Scale.repartitionSized(sized,
-      shingleSets(docs, shingleN)
-        .filter(col("doc_id").isNotNull && col("sh").isNotNull &&
-          size(col("sh")) > 0), col("doc_id"))
-    val sorted = cacheKey match {
-      case Some(k) =>
-        md5TwinMemoDf(docs.sparkSession, k, s"jacsh$shingleN")(sortedBuild)
-      case None => sortedBuild
-    }
+    val sorted = sortedShingles(docs, shingleN, sized, cacheKey)
     // Prefix postings as posexplode + pos-filter (not explode(slice)):
     // value-identical, but the Generate's implicit predicates land on
     // `sh` itself — the same expressions every other branch pushes — so
@@ -2841,17 +2728,7 @@ object LlmOps extends OpModule {
     // shuffle spilled and α_cold hit 1.03 (SOAK_R13_DEEP_SH256.json);
     // sized partitions restored 0.73. No-op below the threshold.
     val sized = Scale.sizedShuffle(docs)
-    // r22: optional session memo of the shingle-set base — see
-    // [[jaccardPairs]]; per-call work = postings + join + confirm.
-    def sortedBuild = Scale.repartitionSized(sized,
-      shingleSets(docs, shingleN)
-        .filter(col("doc_id").isNotNull && col("sh").isNotNull &&
-          size(col("sh")) > 0), col("doc_id"))
-    val sorted = cacheKey match {
-      case Some(k) =>
-        md5TwinMemoDf(docs.sparkSession, k, s"contsh$shingleN")(sortedBuild)
-      case None => sortedBuild
-    }
+    val sorted = sortedShingles(docs, shingleN, sized, cacheKey)
     // BOTH candidate sides derive from ONE posexploded posting
     // relation: the contained side is `pos < prefixLen`, the
     // containing side is every row (the asymmetric bound says nothing
@@ -2894,8 +2771,8 @@ object LlmOps extends OpModule {
     // dominant recurring cost); its window exchange leaves the cached
     // relation hash-partitioned on h, which the candidate join adopts.
     val full = cacheKey match {
-      case Some(k) => md5TwinMemoDf(docs.sparkSession, k,
-        s"contfull${shingleN}_${maxPostingDf.getOrElse(0L)}")(fullBuild)
+      case Some(_) => Memo.frame(
+        s"contfull${shingleN}_${maxPostingDf.getOrElse(0L)}", docs)(fullBuild)
       case None => fullBuild
     }
     // one-sided length filter (asymmetric PPJoin+ form):
@@ -3656,14 +3533,15 @@ object LlmOps extends OpModule {
       // r21: the fingerprint relation (md5 per token occurrence + 64
       // vote sums — the dominant cost) is the signature index a
       // production SimHash dedup maintains incrementally; it is
-      // session-memoized ([[md5TwinMemo]], cold build disclosed) and
-      // the per-call work is bands + candidate join + hamming
-      // confirm. Oracle unchanged; LlmSpec pins restructured ≡
-      // monolithic.
+      // session-memoized ([[Memo]], cold build disclosed) and the
+      // per-call work is bands + candidate join + hamming confirm.
+      // Oracle unchanged; LlmSpec pins restructured ≡ monolithic.
       (s, d) => {
-        Tables.documents(s, d).select("doc_id", "text")
-          .createOrReplaceTempView("graft_shmd5_docs")
-        md5TwinMemo(s, d, "shfp", "graft_shmd5_fp")(s.sql(simhashFpSparkSql))
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        Memo.frame("shfp", docs) {
+          docs.createOrReplaceTempView("graft_shmd5_docs")
+          s.sql(simhashFpSparkSql)
+        }.createOrReplaceTempView("graft_shmd5_fp")
         s.sql(simhashMd5QuerySparkSql)
       },
       Some(simHashMd5Sql(sparkSide = false))),
@@ -3805,9 +3683,7 @@ object LlmOps extends OpModule {
       // session-memoized like every fixed-point rank (cold discloses
       // the winnow + chain build).
       (s, d) => {
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|wrankfx|$d"
-        val scores = key.intern.synchronized(wrankCache.getOrElseUpdate(key, {
+        val scores = Memo.frameFreeing("wrankfx", Tables.documents(s, d)) {
           // r22: edge layer reads the session winnow index — the cold
           // build no longer re-runs the kernel + fp exchange that
           // llm_winnow_pairs already paid for
@@ -3823,11 +3699,8 @@ object LlmOps extends OpModule {
             .persist()
           edges.count()
           edges.createOrReplaceTempView("graft_wr_edges")
-          val r = s.sql(boilerRankFixedSql(sparkSide = true)).persist()
-          r.count()
-          edges.unpersist(blocking = false)
-          r
-        }))
+          (s.sql(boilerRankFixedSql(sparkSide = true)), Seq(edges))
+        }
         scores.orderBy(col("pr").desc, col("doc_id").asc)
       },
       Some(boilerRankFixedSql(sparkSide = false))),
@@ -4225,13 +4098,17 @@ object LlmOps extends OpModule {
       // r21: the per-vector Rademacher projection relation (64-row
       // explode ⋈ hyperplanes + 24 DECIMAL sums — the dominant cost)
       // is the LSH signature index; session-memoized like the IVF
-      // index ([[md5TwinMemo]]), per-call work = band-pack + probe
-      // join + exact rescue. Oracle unchanged; LlmSpec pins
-      // restructured ≡ monolithic.
+      // index ([[Memo]]), per-call work = band-pack + probe join +
+      // exact rescue. Oracle unchanged; LlmSpec pins restructured ≡
+      // monolithic.
       (s, d) => {
-        Tables.embeddings(s, d).select("vec_id", "embedding")
-          .createOrReplaceTempView("graft_lshmd5_emb")
-        md5TwinMemo(s, d, "lshp", "graft_lshmd5_proj")(s.sql(lshProjSparkSql))
+        val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
+        Memo.frame("lshp", emb) {
+          emb.createOrReplaceTempView("graft_lshmd5_emb")
+          s.sql(lshProjSparkSql)
+        }.createOrReplaceTempView("graft_lshmd5_proj")
+        // the probe and rescue joins read the vectors too
+        emb.createOrReplaceTempView("graft_lshmd5_emb")
         s.sql(lshMd5QuerySparkSql)
       },
       Some(lshMd5Sql(sparkSide = false))),
@@ -5324,14 +5201,14 @@ object LlmOps extends OpModule {
         // tokenize + the WindowHashes kernel over every document, the
         // dominant per-call cost — is the suffix-index a production
         // ExactSubstr pipeline maintains per corpus snapshot; session-
-        // memoized ([[md5TwinMemoDf]] discipline), REPARTITIONED BY h1
-        // inside the build so both join sides read the index already
-        // clustered on the first join key (EnsureRequirements accepts
-        // hash(h1)/hash(h1_b) as co-partitioned for the (h1,h2) equi
-        // join — no per-call posting exchange). Per-call work = the
-        // self-join + island windows + aggregates. Oracle unchanged.
-        val wins = md5TwinMemoDf(s, d, "sswin") {
-          val docs = Tables.documents(s, d).select("doc_id", "text")
+        // memoized ([[Memo]]), REPARTITIONED BY h1 inside the build
+        // so both join sides read the index already clustered on the
+        // first join key (EnsureRequirements accepts hash(h1)/hash(h1_b)
+        // as co-partitioned for the (h1,h2) equi join — no per-call
+        // posting exchange). Per-call work = the self-join + island
+        // windows + aggregates. Oracle unchanged.
+        val docs = Tables.documents(s, d).select("doc_id", "text")
+        val wins = Memo.frame("sswin", docs) {
           val toks = tokens(col("text"))
           val clones = docs.select(
             col("doc_id").bitwiseOR(lit(1L << 40)).as("doc_id"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -610,12 +610,6 @@ object Multimodal extends OpModule {
     }
   }
 
-  /** Session memo for [[llm_phash_dedup]]'s hash table — see the op's
-    * comment; one entry per (session, corpus), bounded (2 rows ×
-    * 24 B per image). */
-  private val phashCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
   private val binFixtureWritten =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
@@ -793,12 +787,11 @@ object Multimodal extends OpModule {
     // robustness + self-pair recall + inter-image separation.
     Op("llm_phash_dedup",
       (s, d) => {
-        // session-scoped memo of the (uid, doc_id, enc, phash) table
-        // — the ccCache/ivfIndex cacheKey pattern: the hash table is
-        // a pure function of (session, corpus), an image service
-        // re-reads it on every dedup query, and it is TINY (2 rows ×
-        // 24 B per image — the banded index is smaller than the
-        // corpus it indexes), so repeat executions should hit one
+        // session memo ([[Memo]]) of the hash table: it is a pure
+        // function of the corpus, an image service re-reads it on
+        // every dedup query, and it is TINY (2 rows × 24 B per image
+        // — the banded index is smaller than the corpus it indexes),
+        // so repeat executions should hit one
         // bounded persisted frame instead of re-running the
         // encode→decode→aHash codec pipeline. Cold pass carries the
         // honest build (the Bench two-pass protocol discloses it);
@@ -812,35 +805,32 @@ object Multimodal extends OpModule {
         // cached relation; guide §2.4). doc_id/enc no longer ride the
         // 84-per-image band rows — they reconstruct from uid
         // (uid = doc_id·2 + jpg, a bijection), per §2.3's
-        // keys-not-payloads rule.
-        val key =
-          s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|phash|$d"
-        val banded = key.intern.synchronized(
-          phashCache.getOrElseUpdate(key, {
-            val docs = Tables.documents(s, d)
-            // the png and jpg codec branches are INDEPENDENT stages
-            // the scheduler runs concurrently (a fused one-pass
-            // flatMap variant measured ~30% slower at sf0.1 — it
-            // serializes the codec work one stage deep)
-            val png = perceptualHashes(packBlockImages(docs, fmt = "png"))
-              .toDF()
-              .select(col("doc_id"), col("phash"), lit("png").as("enc"))
-            val jpg = perceptualHashes(packBlockImages(docs, fmt = "jpg"))
-              .toDF()
-              .select(col("doc_id"), col("phash"), lit("jpg").as("enc"))
-            val bd = png.unionByName(jpg)
-              .withColumn("uid",
-                col("doc_id") * 2 +
-                  when(col("enc") === "jpg", 1).otherwise(0))
-              .select(col("uid"), col("phash"),
-                posexplode(array(LlmOps.mankuBandVals(col("phash"), 6): _*)))
-              .withColumnRenamed("pos", "band_id")
-              .withColumnRenamed("col", "band_val")
-              .repartition(col("band_id"), col("band_val"))
-              .persist()
-            bd.count()
-            bd
-          }))
+        // keys-not-payloads rule; the reconstruction needs
+        // doc_id >= 0, since DIV and % truncate toward zero (uid -5
+        // would decode to doc -2/png, not doc -3/jpg) — the corpus's
+        // doc ids are non-negative by construction.
+        val docs = Tables.documents(s, d)
+        val banded = Memo.frame("phash", docs) {
+          // the png and jpg codec branches are INDEPENDENT stages
+          // the scheduler runs concurrently (a fused one-pass
+          // flatMap variant measured ~30% slower at sf0.1 — it
+          // serializes the codec work one stage deep)
+          val png = perceptualHashes(packBlockImages(docs, fmt = "png"))
+            .toDF()
+            .select(col("doc_id"), col("phash"), lit("png").as("enc"))
+          val jpg = perceptualHashes(packBlockImages(docs, fmt = "jpg"))
+            .toDF()
+            .select(col("doc_id"), col("phash"), lit("jpg").as("enc"))
+          png.unionByName(jpg)
+            .withColumn("uid",
+              col("doc_id") * 2 +
+                when(col("enc") === "jpg", 1).otherwise(0))
+            .select(col("uid"), col("phash"),
+              posexplode(array(LlmOps.mankuBandVals(col("phash"), 6): _*)))
+            .withColumnRenamed("pos", "band_id")
+            .withColumnRenamed("col", "band_val")
+            .repartition(col("band_id"), col("band_val"))
+        }
         val a = banded.as("a")
         val b = banded.as("b")
         a.join(b,

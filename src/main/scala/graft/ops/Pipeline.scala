@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -317,11 +317,8 @@ object PipelineOps extends OpModule {
     *    earlier localCheckpoint rendering leaked every round's blocks
     *    for the session lifetime).
     */
-  /** `cacheKey` must identify the INPUT DOC SET, not just the corpus
-    * dir: the memo key folds in (session, cacheKey, tau, shingleN)
-    * and nothing else, so two callers with different clone plantings
-    * sharing a bare corpus key would silently read each other's
-    * labels — tag the planting (e.g. "sfdir|w=droplast"). */
+  /** With a `cacheKey` the labels are a session memo ([[Memo]]) keyed
+    * on `docs` and the parameters. */
   def dedupClusters(docs: DataFrame, tau: Double = 0.8,
       shingleN: Int = 5, maxIters: Int = 25,
       cacheKey: Option[String] = None): DataFrame = {
@@ -337,51 +334,22 @@ object PipelineOps extends OpModule {
           col("cluster_size")),
        handle)
     }
-    // session-scoped result memo, the [[LlmOps.ivfIndex]] cacheKey
-    // pattern: clustering is a multi-job iterative computation whose
-    // result a long-lived service re-reads (every "is this doc a dup
-    // of cluster X?" query), so repeat executions should hit ONE
-    // bounded persisted frame, not re-run the loop. Until r9 this
-    // memoization happened by ACCIDENT (per-round caches were never
-    // unpersisted and later runs sameResult-matched them — the ADVICE
-    // r8 leak); now the rounds are freed as they age and the memo is
-    // deliberate: one entry per (session, corpus), evictable via
-    // [[evictCcCache]].
+    // clustering is a multi-job iterative computation whose result a
+    // long-lived service re-reads (every "is this doc a dup of
+    // cluster X?" query), so the keyed path memoizes ONE bounded
+    // persisted frame; the memo's plan is a flat leaf over the final
+    // round, so that round's own cache entry is freed once it is built
     cacheKey match {
-      case Some(k) =>
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(docs.sparkSession)}|$k|t$tau|n$shingleN"
-        // key-scoped lock: TrieMap.getOrElseUpdate evaluates the
-        // builder under a race, and the losing builder's PERSISTED
-        // frame would stay cached with no reachable reference (the
-        // ivfBaseDirCache lesson, ADVICE r9)
-        key.intern.synchronized(ccCache.getOrElseUpdate(key, {
+      case Some(_) =>
+        Memo.frameFreeing(s"ccl|t$tau|n$shingleN|i$maxIters", docs) {
           val (df, handle) = build()
-          val r = df.persist()
-          r.count()
-          // the memo's own blocks are materialized and its plan is a
-          // flat leaf over the final round, so the inner round's cache
-          // entry (unreachable from outside) can be freed NOW — before
-          // r9 it stayed cached for the session alongside the memo
-          handle.unpersist(blocking = false)
-          r
-        }))
+          (df, Seq(handle))
+        }
       case None =>
         // lazy result: the caller reads through the final round's
         // blocks, so the handle must stay alive — same contract as
         // any lazy frame over a persisted parent
         build()._1
-    }
-  }
-
-  private val ccCache =
-    scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  /** Evict this session's memoized cluster results — companion to
-    * [[LlmOps.evictIvfCache]] for a long-lived service. */
-  def evictCcCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|"
-    ccCache.keys.filter(_.startsWith(prefix)).foreach { k =>
-      ccCache.remove(k).foreach(_.unpersist(blocking = false))
     }
   }
 
@@ -403,7 +371,7 @@ object PipelineOps extends OpModule {
 
   /** [[connectedComponents]] plus the persisted DataFrame whose cache
     * blocks back the returned (lazy) labels. A caller that
-    * materializes its OWN copy of the labels (the ccCache memo) must
+    * materializes its OWN copy of the labels (a [[graft.Memo]]) must
     * unpersist the handle afterwards or the final round stays cached
     * for the session with no reachable reference (ADVICE-class leak);
     * a caller that keeps reading the lazy frame must keep it alive.
@@ -482,7 +450,7 @@ object PipelineOps extends OpModule {
       // high-diameter graph: propagation is still moving after `cap`
       // rounds — switch to the O(log n) contraction. The returned
       // frame is REWRAPPED so callers that persist a projection of it
-      // (the ccCache memo) can drop `handle` without CacheManager
+      // (a memo) can drop `handle` without CacheManager
       // recompiling — and discarding — their own fresh cache entry.
       persisted.unpersist()
       val (sl, _) = starContract(edges)
@@ -1718,7 +1686,7 @@ object PipelineOps extends OpModule {
       // 1/cluster-size so each duplicate CLUSTER contributes unit
       // mass to the loss, not each copy. Reuses the exact same
       // cluster labels as llm_dedup_clusters (same corpus, τ, n ⇒
-      // same ccCache memo entry — the multi-consumer read pattern the
+      // same memo entry — the multi-consumer read pattern the
       // memo exists for); docs outside every cluster default to
       // weight 1.0 via the left join (vacuous on this workload —
       // every doc has a clone — but the general contract). The

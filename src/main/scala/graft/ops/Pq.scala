@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -265,21 +265,10 @@ object PqOps extends OpModule {
   private def rotateCol(e: Column, rot: Seq[Seq[Double]]): Column =
     transform(typedLit(rot), r => call_function("graft_dot", r, e))
 
-  private val pqCache =
-    scala.collection.concurrent.TrieMap[String, PqCodebook]()
-
-  private val rotCache =
-    scala.collection.concurrent.TrieMap[String, Option[Seq[Seq[Double]]]]()
-
-  /** Evict this session's cached codebooks — companion to
-    * [[LlmOps.evictIvfCache]] for a long-lived embedding service.
-    * (Codebooks are plain driver objects, so eviction is just map
-    * removal — no block-manager state to unpersist.) */
-  def evictPqCache(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val prefix = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}|"
-    pqCache.keys.filter(_.startsWith(prefix)).foreach(pqCache.remove)
-    rotCache.keys.filter(_.startsWith(prefix)).foreach(rotCache.remove)
-  }
+  /** The learned OPQ rotation of `emb`'s corpus, a session memo
+    * ([[Memo]]) shared by every rotated query over it. */
+  private def opqRotation(emb: DataFrame): Option[Seq[Seq[Double]]] =
+    Memo.value("opq", emb)(opqLearnRotation(emb))
 
   /** One seeded-Lloyd step per subspace (seeds = first k vec_ids, the
     * [[LlmOps.lloydCentroids]] convention; empty clusters keep their
@@ -291,8 +280,10 @@ object PqOps extends OpModule {
     * full-corpus groupBy jobs; at 100 TB that is m avoidable corpus
     * passes for codebooks a 2048-vector sample determines just as
     * well. O(sampleN·D) driver bytes — the coarse-quantizer
-    * materialization class. `cacheKey` reuses codebooks per
-    * (session, corpus) like the IVF index cache. */
+    * materialization class. With a `cacheKey` the codebook is a
+    * session memo ([[Memo]]) keyed on `emb` and the parameters, one
+    * plain and one rotated; a call whose rotation differs from the
+    * memoized codebook's trains a codebook of its own. */
   def pqTrain(emb: DataFrame, m: Int = 8, k: Int = 16,
       cacheKey: Option[String] = None,
       rot: Option[Seq[Seq[Double]]] = None,
@@ -342,9 +333,9 @@ object PqOps extends OpModule {
       PqCodebook(m, dSub, books, rot)
     }
     cacheKey match {
-      case Some(kk) =>
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(emb.sparkSession)}|$kk|m$m|k$k|r${rot.map(_.hashCode).getOrElse(0)}"
-        pqCache.getOrElseUpdate(key, build())
+      case Some(_) =>
+        val cb = Memo.value(s"pq|m$m|k$k|n$sampleN|r${rot.isDefined}", emb)(build())
+        if (cb.rot == rot) cb else build()
       case None => build()
     }
   }
@@ -483,8 +474,7 @@ object PqOps extends OpModule {
       // isotropic fixture), so it can never do worse than plain PQ
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|$d"
-        val rot = rotCache.getOrElseUpdate(key, opqLearnRotation(emb))
+        val rot = opqRotation(emb)
         simSearchIvfPq(emb, nProbes = 50, topK = 10, cacheKey = Some(d),
           rot = rot)
           .orderBy("p_id", "rank")
@@ -506,8 +496,7 @@ object PqOps extends OpModule {
       // driver's DuckDB hash gate.
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|$d"
-        val rot = rotCache.getOrElseUpdate(key, opqLearnRotation(emb))
+        val rot = opqRotation(emb)
         simSearchIvfPq(emb, nProbes = 5, topK = 10, nCentroids = 8,
           nProbe = 8, rerank = Int.MaxValue, cacheKey = Some(d), rot = rot)
           .orderBy("p_id", "rank")
@@ -545,8 +534,7 @@ object PqOps extends OpModule {
       // orthonormality tests
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val key = s"${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s)}|$d"
-        val rot = rotCache.getOrElseUpdate(key, opqLearnRotation(emb))
+        val rot = opqRotation(emb)
         val cb = pqTrain(emb, cacheKey = Some(d), rot = rot)
         pqEncode(emb, cb)
           .select(col("vec_id"), col("packed"), col("cos_err"),

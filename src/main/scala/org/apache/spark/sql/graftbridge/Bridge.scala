@@ -45,7 +45,12 @@ object Bridge {
     * persisted `WITH` build is silently rebuilt inside every
     * consumer. Inlining before persist+register removes the WithCTE
     * wrapper entirely, making the view fragment the same plain tree
-    * the cache is keyed on (the form CTE-free builds get for free). */
+    * the cache is keyed on (the form CTE-free builds get for free).
+    *
+    * Precondition: `df` is deterministic. Inlining copies a CTE into
+    * each of its references, so a `rand()` or `uuid()` inside one
+    * would be evaluated once per copy instead of once; `graft.Memo`
+    * checks this before it persists a build. */
   def inlineCtes(df: DataFrame): DataFrame =
     ofRows(df.sparkSession,
       org.apache.spark.sql.catalyst.optimizer.InlineCTE(alwaysInline = true)

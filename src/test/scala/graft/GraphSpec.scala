@@ -105,7 +105,7 @@ class GraphSpec extends SparkSpec {
     // re-run hits the session memo: identical rows, no rebuild
     val again = SparkEntry.queries("graph_pagerank")(spark, sf001).collect()
     assert(again.map(_.toString).toSeq == top.map(_.toString).toSeq)
-    ops.GraphOps.evictPrCache(spark)
+    Memo.clear(spark)
   }
 
   /** In-memory HITS reference — identical formulation (max-normalized
@@ -163,7 +163,7 @@ class GraphSpec extends SparkSpec {
     assert(as.head == 1.0 && as.forall(a => a >= 0.0 && a <= 1.0))
     val again = SparkEntry.queries("graph_hits")(spark, sf001).collect()
     assert(again.map(_.toString).toSeq == top.map(_.toString).toSeq)
-    ops.GraphOps.evictPrCache(spark)
+    Memo.clear(spark)
   }
 
   test("graph_pagerank_fixed ≡ the float PageRank form on the rank ordering") {
@@ -181,7 +181,7 @@ class GraphSpec extends SparkSpec {
     fixed.zip(float).foreach { case ((n, pf), (_, ff)) =>
       assert(math.abs(pf - ff) < 1e-5, s"node $n: fixed $pf float $ff")
     }
-    ops.GraphOps.evictPrCache(spark)
+    Memo.clear(spark)
   }
 
   test("graph_hits_fixed ≡ the float HITS form on the authority ordering") {
@@ -199,6 +199,6 @@ class GraphSpec extends SparkSpec {
     fixed.zip(float).foreach { case ((s, af), (_, ff)) =>
       assert(math.abs(af - ff) < 1e-5, s"supplier $s: fixed $af float $ff")
     }
-    ops.GraphOps.evictPrCache(spark)
+    Memo.clear(spark)
   }
 }
