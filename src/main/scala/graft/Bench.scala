@@ -191,6 +191,7 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(out),
         jsonFull.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
+    Memo.clear(spark)
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

@@ -63,6 +63,7 @@ object LineageAudit {
         empty.sorted.mkString(", "))
     if (failed.nonEmpty)
       println(s"[lineage] FAILED: ${failed.sorted.mkString(", ")}")
+    Memo.clear(spark)
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftbridge.Bridge
@@ -8,10 +9,12 @@ import org.apache.spark.storage.StorageLevel
 /** The session memo registry: per-corpus state an op builds once per
   * session and every later call re-reads — token arrays, shingle
   * bases, value grids, session intervals, rank and label tables, IVF
-  * assignments, PQ codebooks. It is the in-session stand-in for the
-  * materialized tables a production pipeline maintains per corpus
-  * snapshot; the first call pays the build, later calls read the
-  * cached relation.
+  * assignments, PQ codebooks — and the on-disk fixtures an op writes
+  * once and reads by path (partitioned, ORC, Avro and Derby copies, a
+  * bucketed table pair, an IVF base index). It is the in-session
+  * stand-in for the materialized tables a production pipeline
+  * maintains per corpus snapshot; the first call pays the build, later
+  * calls read the cached relation or the written directory.
   *
   *  - '''Key''': (session, `tag`, `inputs`). `inputs` are the frames
   *    the build reads, matched by `sameResult` on their normalized
@@ -27,13 +30,19 @@ import org.apache.spark.storage.StorageLevel
   *    frame (so the cached relation matches inside every consumer),
   *    requires its analyzed plan to be deterministic, persists it
   *    MEMORY_AND_DISK and materializes it; [[value]] keeps a
-  *    driver-side result as it is. Each build writes one stderr line
-  *    with its tag and seconds (stderr: Bench's stdout is parsed).
-  *  - '''Clear''': [[clear]] drops and unpersists every entry of a
-  *    session. A dropped entry rebuilds from lineage on its next use
-  *    (the D-Streams recovery argument): a build is a deterministic
-  *    function of its inputs, so clearing costs time and never
-  *    changes a result.
+  *    driver-side result as it is; [[dir]] makes a fresh directory
+  *    under the system temp dir and lets `write` fill it. A `write`
+  *    that throws leaves no directory and no entry result, so the next
+  *    call retries; a hit whose directory has vanished from outside
+  *    rebuilds into a new one. Each build writes one stderr line with
+  *    its tag and seconds (stderr: Bench's stdout is parsed).
+  *  - '''Clear''': [[clear]] drops every entry of a session: it
+  *    unpersists the frames, and deletes the directories together with
+  *    any catalog table stored under them. A dropped entry rebuilds
+  *    from lineage on its next use (the D-Streams recovery argument):
+  *    a build is a deterministic function of its inputs, so clearing
+  *    costs time and never changes a result. Every main clears its
+  *    session before it stops it.
   *
   * There is no byte budget and no eviction policy here: Spark's
   * MemoryStore already evicts cached blocks least-recently-used first
@@ -41,6 +50,9 @@ import org.apache.spark.storage.StorageLevel
   * that one.
   */
 object Memo {
+
+  /** A [[dir]] result, told apart from a [[value]] that is a string. */
+  private final case class Dir(path: String)
 
   private final class Entry(val session: String, val tag: String,
       val inputs: Seq[LogicalPlan]) {
@@ -73,7 +85,9 @@ object Memo {
     val e = entry(tag, inputs)
     val got = e.synchronized {
       if (e.dropped) None // cleared between lookup and lock: look up again
-      else Some(e.result.getOrElse {
+      else Some(e.result.filter(present).getOrElse {
+        e.result.foreach(free(inputs.head.sparkSession)) // a vanished dir's tables
+        e.result = None
         val t0 = System.nanoTime()
         val r = build
         e.result = Some(r)
@@ -112,8 +126,43 @@ object Memo {
       } finally scratch.foreach(_.unpersist(blocking = false))
     }
 
-  /** Drop every entry of `spark`'s session and unpersist its frames;
-    * an entry whose build is running is dropped once the build ends. */
+  /** A fresh directory `write` fills from `inputs`, once per session:
+    * an on-disk fixture later calls read by path. `write` runs under
+    * the entry's lock; if it throws, the directory is deleted and the
+    * next call writes a new one. A hit whose directory has vanished
+    * writes a new one too. */
+  def dir(tag: String, inputs: DataFrame*)(write: String => Unit): String =
+    memo(tag, inputs) {
+      val d = Files.createTempDirectory(s"graft_${tag}_").toString
+      try write(d)
+      catch { case t: Throwable => free(inputs.head.sparkSession)(Dir(d)); throw t }
+      Dir(d)
+    }.path
+
+  private def present(result: Any): Boolean = result match {
+    case Dir(p) => Files.isDirectory(Paths.get(p))
+    case _ => true
+  }
+
+  /** Release what one entry result holds: unpersist a frame; drop the
+    * catalog tables stored under a directory, then delete it. */
+  private def free(spark: SparkSession)(result: Any): Unit = result match {
+    case df: Dataset[_] => df.unpersist(blocking = false)
+    case Dir(p) =>
+      Bridge.tablesUnder(spark, p).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      val root = Paths.get(p)
+      if (Files.exists(root)) {
+        val w = Files.walk(root)
+        try w.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach { f => Files.deleteIfExists(f); () }
+        finally w.close()
+      }
+    case _ =>
+  }
+
+  /** Drop every entry of `spark`'s session: unpersist its frames and
+    * delete its directories (see [[free]]); an entry whose build is
+    * running is dropped once the build ends. */
   def clear(spark: SparkSession): Unit = {
     val sid = Bridge.sessionUUID(spark)
     val mine = synchronized {
@@ -123,10 +172,7 @@ object Memo {
     }
     mine.foreach(e => e.synchronized {
       e.dropped = true
-      e.result.foreach {
-        case df: Dataset[_] => df.unpersist(blocking = false)
-        case _ =>
-      }
+      e.result.foreach(free(spark))
     })
   }
 

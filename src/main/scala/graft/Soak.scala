@@ -117,6 +117,7 @@ object Soak {
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"[soak] report -> $out")
+    Memo.clear(spark)
     spark.stop()
   }
 

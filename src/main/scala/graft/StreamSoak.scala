@@ -232,6 +232,7 @@ object StreamSoak {
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"[stream-soak] report -> $out")
+    Memo.clear(spark)
     spark.stop()
   }
 }

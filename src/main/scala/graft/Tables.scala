@@ -69,52 +69,4 @@ object Tables {
           col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case _ => df
     }
-
-  /** Scratch root for a write-once fixture, scoped by (session,
-    * corpus): `/tmp/graft_fixtures/<name>/<sessionUUID>/<md5(sfDir)>`.
-    * One dir per (session, corpus) means concurrent sessions never
-    * overwrite each other's fixtures mid-scan and different-SF runs
-    * within a session never race — the ONE keying recipe every
-    * fixture-writing op shares (a per-op copy of this logic is how
-    * keying schemes silently drift apart).
-    */
-  def fixtureRoot(spark: SparkSession, sfDir: String, name: String): String = {
-    val digest = java.security.MessageDigest.getInstance("MD5")
-      .digest(sfDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val sid = org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)
-    s"/tmp/graft_fixtures/$name/$sid/$digest"
-  }
-
-  /** Drop every on-disk fixture this session wrote under
-    * [[fixtureRoot]] (join_bucketed, scan_partitioned,
-    * scan_schema_evolution, …) plus the catalog entries the bucketed
-    * fixture registered — the teardown hook a long-lived service
-    * calls, mirroring `LlmOps.deleteIvfScratch` /
-    * `LayoutOps.evictCompactScratch` (ADVICE r10/r11: the fixture
-    * family was the one scratch class with no eviction path; fixture
-    * ops re-check the path on next use, so evict-then-reuse heals by
-    * rewriting).
-    */
-  def evictFixtures(spark: SparkSession): Unit = {
-    val sid = org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)
-    // the bucketed fixture derives its catalog names from the last
-    // two root segments, dash-stripped and truncated to 12 — match
-    // that tag so only THIS session's tables drop
-    val sidTag = sid.replace("-", "").take(12)
-    spark.catalog.listTables().collect().map(_.name)
-      .filter(t => t.startsWith("graft_") && t.contains(sidTag))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-    val base = new java.io.File("/tmp/graft_fixtures")
-    if (base.isDirectory) base.listFiles().foreach { nameDir =>
-      val sidDir = new java.io.File(nameDir, sid)
-      if (sidDir.isDirectory) {
-        val root = sidDir.toPath
-        val w = java.nio.file.Files.walk(root)
-        try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach { p => java.nio.file.Files.deleteIfExists(p); () }
-        finally w.close()
-      }
-    }
-  }
 }

@@ -30,6 +30,7 @@ object Verify {
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       SparkEntry.oracleSqlJson)
+    Memo.clear(spark)
     spark.stop()
   }
 }

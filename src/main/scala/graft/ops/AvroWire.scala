@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -190,12 +190,9 @@ object AvroWire extends OpModule {
       .as[EnvRecord]
   }
 
-  private val avroDirWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Write the envelope as Avro OBJECT CONTAINER files once per
-    * (session, corpus) — the landing-zone artifact (embedded writer
-    * schema + sync markers, the self-describing file a crawler/CDC
+  /** Write the envelope as Avro OBJECT CONTAINER files into a session
+    * fixture dir ([[Memo.dir]]) — the landing-zone artifact (embedded
+    * writer schema + sync markers, the self-describing file a crawler/CDC
     * archiver actually drops into object storage), where
     * [[toAvroBytes]] is the per-record TRANSPORT framing. Written
     * EXECUTOR-side: position-ranged partitions each stream their
@@ -204,38 +201,33 @@ object AvroWire extends OpModule {
     * pick the file covering your position). */
   private[ops] def avroFixtureDir(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val root = Tables.fixtureRoot(s, d, "avrofiles")
-    root.intern.synchronized {
-      if (!avroDirWritten.contains(root) || !new java.io.File(root).exists()) {
-        new java.io.File(root).mkdirs()
-        val schemaJson = EnvelopeSchemaJson
-        flatEnvelope(Tables.events(s, d))
-          .repartitionByRange(8, col("position"))
-          .foreachPartition { (it: Iterator[EnvRecord]) =>
-            if (it.hasNext) {
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              val schema = new Schema.Parser().parse(schemaJson)
-              val w = new org.apache.avro.file.DataFileWriter(
-                new GenericDatumWriter[GenericRecord](schema))
-              w.create(schema,
-                new java.io.File(root, f"envelope-$pid%03d.avro"))
-              it.foreach { e =>
-                val r = new GenericData.Record(schema)
-                r.put("position", e.position); r.put("pk", e.pk)
-                r.put("ts_us", e.ts_us); r.put("op", e.op)
-                r.put("txn_id", e.txn_id); r.put("txn_seq", e.txn_seq)
-                r.put("before_value", e.before_value.map(Double.box).orNull)
-                r.put("after_value", e.after_value.map(Double.box).orNull)
-                r.put("ddl_stmt", e.ddl_stmt.orNull)
-                w.append(r)
-              }
-              w.close()
+    val events = Tables.events(s, d)
+    Memo.dir("scan_avro", events) { root =>
+      val schemaJson = EnvelopeSchemaJson
+      flatEnvelope(events)
+        .repartitionByRange(8, col("position"))
+        .foreachPartition { (it: Iterator[EnvRecord]) =>
+          if (it.hasNext) {
+            val pid = org.apache.spark.TaskContext.getPartitionId()
+            val schema = new Schema.Parser().parse(schemaJson)
+            val w = new org.apache.avro.file.DataFileWriter(
+              new GenericDatumWriter[GenericRecord](schema))
+            w.create(schema,
+              new java.io.File(root, f"envelope-$pid%03d.avro"))
+            it.foreach { e =>
+              val r = new GenericData.Record(schema)
+              r.put("position", e.position); r.put("pk", e.pk)
+              r.put("ts_us", e.ts_us); r.put("op", e.op)
+              r.put("txn_id", e.txn_id); r.put("txn_seq", e.txn_seq)
+              r.put("before_value", e.before_value.map(Double.box).orNull)
+              r.put("after_value", e.after_value.map(Double.box).orNull)
+              r.put("ddl_stmt", e.ddl_stmt.orNull)
+              w.append(r)
             }
+            w.close()
           }
-        avroDirWritten.add(root)
-      }
+        }
     }
-    root
   }
 
   /** `cdc_envelope_full`'s oracle SQL verbatim — shared by every

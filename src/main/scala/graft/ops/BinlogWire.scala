@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -302,12 +302,9 @@ object BinlogWire extends OpModule {
     (out.result(), resume, truncated || pending.nonEmpty)
   }
 
-  private val shardWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Write the sharded binlog fixture once per (session, corpus) —
-    * EXECUTOR-side: txn-ranged partitions (txns never straddle a
-    * shard; a split transaction would be an unfaithful log) each
+  /** Write the sharded binlog fixture into a session fixture dir
+    * ([[Memo.dir]]) — EXECUTOR-side: txn-ranged partitions (txns never
+    * straddle a shard; a split transaction would be an unfaithful log) each
     * synthesize and write their own shard file. Shard count GROWS
     * with the log (~100k events per shard, floor 4, cap 256): a
     * binlog parses sequentially within a shard by nature, so
@@ -319,37 +316,30 @@ object BinlogWire extends OpModule {
     * for that fleet. */
   private[ops] def binlogFixtureDir(s: org.apache.spark.sql.SparkSession,
       d: String): String = {
-    val root = Tables.fixtureRoot(s, d, "binlog")
-    root.intern.synchronized {
-      if (!shardWritten.contains(root) || !new java.io.File(root).exists()) {
-        new java.io.File(root).mkdirs()
-        import s.implicits._
-        val nEvents = Tables.events(s, d).count()
-        val nShards = math.min(256L, math.max(4L, nEvents / 100000L)).toInt
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"),
-            expr("unix_micros(ts) DIV 1000000").as("ts_sec"),
-            col("value"), col("event_type"),
-            expr(s"event_id DIV $TxnW").as("txn_id"))
-          .repartitionByRange(nShards, col("txn_id"))
-          .sortWithinPartitions("event_id")
-          .as[(Long, Long, Long, Double, String, Long)]
-          .foreachPartition { (it: Iterator[(Long, Long, Long, Double, String, Long)]) =>
-            val rows = it.map { case (id, uid, ts, v, et, _) =>
-              (id, uid, ts, v, et) }.toVector
-            if (rows.nonEmpty) {
-              val shard = (rows.head._1 / TxnW) % 1000000
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(root, f"shard_$shard%07d.binlog"),
-                synthesize(rows.iterator))
-            }
-            ()
+    val events = Tables.events(s, d)
+    Memo.dir("cdc_binlog", events) { root =>
+      import s.implicits._
+      val nShards = math.min(256L, math.max(4L, events.count() / 100000L)).toInt
+      events
+        .select(col("event_id"), col("user_id"),
+          expr("unix_micros(ts) DIV 1000000").as("ts_sec"),
+          col("value"), col("event_type"),
+          expr(s"event_id DIV $TxnW").as("txn_id"))
+        .repartitionByRange(nShards, col("txn_id"))
+        .sortWithinPartitions("event_id")
+        .as[(Long, Long, Long, Double, String, Long)]
+        .foreachPartition { (it: Iterator[(Long, Long, Long, Double, String, Long)]) =>
+          val rows = it.map { case (id, uid, ts, v, et, _) =>
+            (id, uid, ts, v, et) }.toVector
+          if (rows.nonEmpty) {
+            val shard = (rows.head._1 / TxnW) % 1000000
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(root, f"shard_$shard%07d.binlog"),
+              synthesize(rows.iterator))
           }
-        shardWritten.add(root)
-        ()
-      }
+          ()
+        }
     }
-    root
   }
 
   /** binaryFile scan over the shard dir → parallel per-shard parse. */

@@ -405,8 +405,8 @@ object GraphOps extends OpModule {
   }
 
   /** The session-memoized support-filtered supplier co-occurrence
-    * edge list (s1 < s2; adjacent = ≥ 6 shared orders) — built once
-    * per (session, corpus) and shared by [[graph_triangle_count]]'s
+    * edge list (s1 < s2; adjacent = ≥ 6 shared orders) — a session
+    * memo ([[Memo]]) shared by [[graph_triangle_count]]'s
     * three-way join and [[graph_reachability]]'s BFS (one derivation,
     * two graph algorithms — the materialized-edge-table discipline;
     * ReusedExchange would share only the shuffle write, each of the
@@ -587,7 +587,7 @@ object GraphOps extends OpModule {
       // here. Per round: two frontier-sized equi-join + map-combined
       // aggregates (src-keyed, dst-keyed), 1-row max broadcasts;
       // the pageRankWithHandle persist/rewrap discipline bounds the
-      // plan depth. Session-memoized per (session, corpus).
+      // plan depth. A session memo ([[Memo]]).
       (s, d) => {
         val li = Tables.lineitem(s, d).select("l_orderkey", "l_suppkey")
         val o = Tables.orders(s, d).select("o_orderkey", "o_custkey")
@@ -623,9 +623,9 @@ object GraphOps extends OpModule {
       // equi-join of the bounded distinct trade graph against the
       // previous persisted score relation + one map-combined DECIMAL
       // aggregate + a 1-row broadcast — the float form's exact plan
-      // shape. The final scores are session-memoized per
-      // (session, corpus) like graph_hits/graph_pagerank (the
-      // build disclosed in the cold pass): the
+      // shape. The final scores are a session memo like
+      // graph_hits/graph_pagerank (the build disclosed in the cold
+      // pass): the
       // returned frame must stay collectable after the per-round
       // caches are freed, and an unpersisted lazy chain would
       // recompute with the duplicated-tree shape. GraphSpec pins
@@ -898,8 +898,8 @@ object GraphOps extends OpModule {
         // tree cost ~7 s of compile+schedule per call at sf0.1
         // regardless of data size (measured; frontier-sizing the
         // exchanges didn't move it — the cost was the plan, not the
-        // tasks). The converged membership table memoizes per
-        // (session, corpus) like the rank/edge tables — it IS the
+        // tasks). The converged membership table is a session memo
+        // like the rank/edge tables — it IS the
         // reusable artifact (the cohesion filter downstream jobs
         // join against), rebuilt when the corpus snapshot changes.
         val part = Tables.part(s, d)
@@ -984,7 +984,7 @@ object GraphOps extends OpModule {
       // component = min member id, the canonical-label convention) —
       // and component_size is a component-KEYED window over the
       // catalog-bounded supplier relation (partitioned, never
-      // global). Labels memoized per (session, corpus) like the
+      // global). Labels are a session memo like the
       // rank/edge/membership tables; the oracle is the recursive
       // min-label closure.
       (s, d) => {

@@ -82,33 +82,28 @@ object Joins extends OpModule {
       // co-located buckets directly — no exchange on either side, the
       // layout users buy with bucketBy at 100 TB (pay the shuffle
       // once at write time, never again per query). The bucketed
-      // fixture is written once per (session, corpus) under a
-      // session-scoped path + catalog name (saveAsTable is what
-      // carries bucket metadata); the steady-state run measures the
+      // fixture is a session fixture dir ([[Memo.dir]]) plus catalog
+      // tables named after it (saveAsTable is what carries bucket
+      // metadata); the steady-state run measures the
       // exchange-free join itself. PlanSpec pins no hashpartitioning
       // exchange under the join; the oracle reads the original
       // tables — same rows by construction.
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "bucketed")
-        // catalog identifiers from the same (session, corpus) key the
-        // root encodes (dashes stripped, truncated for readability)
-        val tag = root.split('/').takeRight(2)
-          .map(_.replace("-", "").take(12)).mkString("_")
-        val (tOrd, tCust) = (s"graft_b_ord_$tag", s"graft_b_cust_$tag")
-        root.intern.synchronized {
-          // double-check the backing PATH, not just the catalog: a
-          // /tmp cleaner on a long-lived session leaves a dangling
-          // catalog entry whose scans would fail forever after
-          if (!s.catalog.tableExists(tOrd) || !s.catalog.tableExists(tCust)
-              || !new java.io.File(root).exists()) {
-            Tables.orders(s, d).write.option("path", s"$root/orders")
-              .bucketBy(8, "o_custkey").sortBy("o_custkey")
-              .mode("overwrite").saveAsTable(tOrd)
-            Tables.customer(s, d).write.option("path", s"$root/cust")
-              .bucketBy(8, "c_custkey").sortBy("c_custkey")
-              .mode("overwrite").saveAsTable(tCust)
-          }
+        val (ord, cust) = (Tables.orders(s, d), Tables.customer(s, d))
+        // the tables are named after their dir, so each dir has its own
+        def names(root: String) = {
+          val t = new java.io.File(root).getName
+          (s"${t}_ord", s"${t}_cust")
         }
+        val (tOrd, tCust) = names(Memo.dir("join_bucketed", ord, cust) { root =>
+          val (tOrd, tCust) = names(root)
+          ord.write.option("path", s"$root/orders")
+            .bucketBy(8, "o_custkey").sortBy("o_custkey")
+            .mode("overwrite").saveAsTable(tOrd)
+          cust.write.option("path", s"$root/cust")
+            .bucketBy(8, "c_custkey").sortBy("c_custkey")
+            .mode("overwrite").saveAsTable(tCust)
+        })
         // hint("merge") pins SMJ: Catalyst would otherwise broadcast
         // the small-SF dim and never exercise the bucket layout the
         // op exists to demonstrate (at real scale neither side

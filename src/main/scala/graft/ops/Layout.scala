@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -393,79 +393,28 @@ object LayoutOps extends OpModule {
 
   // ---------------------------------------------------------------
 
-  /** Scratch roots whose fragmented demo input has been written — the
-    * once-per-(session, corpus) fixture memo for the registered
-    * `layout_compact` query. The root embeds the sessionUUID, so no
-    * two sessions ever share (or overwrite under) each other's
-    * scratch; a key is added only AFTER the write succeeds, so a
-    * failed write can never poison the memo into compacting a partial
-    * dir; misses re-verify the dir on disk, so an externally cleaned
-    * /tmp heals itself. [[evictCompactScratch]] is the teardown hook.
-    */
-  private val compactFragWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Run the `layout_compact` maintenance cycle: write the
-    * 64-shard fragmented demo input once per (session, corpus), then
-    * compact it. Shared by `layout_compact` (file-grain readout,
-    * rows-only) and `layout_compact_digest` (content readout, fully
-    * oracled — r19). Returns (dstDir, files_before, files_after,
-    * rows). */
+    * 64-shard fragmented demo input into a session fixture dir
+    * ([[Memo.dir]]), then compact it into that dir's `compacted`.
+    * Shared by `layout_compact` (file-grain readout, rows-only) and
+    * `layout_compact_digest` (content readout, fully oracled — r19).
+    * Returns (dstDir, files_before, files_after, rows). */
   private def compactCycle(s: org.apache.spark.sql.SparkSession,
       d: String): (String, Int, Int, Long) = {
-    // SESSION-scoped root: sessions never overwrite each other's
-    // scratch mid-scan, and the memo below can't outlive its files
-    val root = Tables.fixtureRoot(s, d, "compact_demo")
+    // the fragmented INPUT is fixture setup (in production it is the
+    // stream sink's own output, which a maintenance run never
+    // re-creates), so the steady-state run measures the compact cycle
+    // itself; the cold pass still carries (and discloses) the fixture
+    // write, the same split llm_ivf_append_probe reports
+    val cust = Tables.customer(s, d)
+      .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
+    val root = Memo.dir("layout_compact", cust)(root =>
+      cust.repartition(64, col("c_custkey"))
+        .write.mode("overwrite").parquet(s"$root/frag"))
     val (srcDir, dstDir) = (s"$root/frag", s"$root/compacted")
-    // the fragmented INPUT is fixture setup (in production it is
-    // the stream sink's own output, which a maintenance run never
-    // re-creates) — write it once per (session, corpus) so the
-    // steady-state run measures the compact cycle itself; the cold
-    // pass still carries (and discloses) the fixture write, the
-    // same split llm_ivf_append_probe reports. Memoized only AFTER
-    // the write succeeds (a failed write must retry, never feed
-    // compact a partial dir); root.intern guards same-session
-    // concurrent callers
-    root.intern.synchronized {
-      if (!compactFragWritten.contains(root) ||
-          !new java.io.File(srcDir).exists()) {
-        Tables.customer(s, d)
-          .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-          .repartition(64, col("c_custkey"))
-          .write.mode("overwrite").parquet(srcDir)
-        compactFragWritten.add(root)
-      }
-    }
     val (before, after, rows) =
       compact(s, srcDir, dstDir, "c_custkey", targetRowsPerFile = 500L)
     (dstDir, before, after, rows)
-  }
-
-  /** Delete this session's `layout_compact` scratch dirs — teardown
-    * for a long-lived service, mirroring `LlmOps.deleteIvfScratch`. */
-  def evictCompactScratch(spark: org.apache.spark.sql.SparkSession): Unit = {
-    // the scratch lives under Tables.fixtureRoot(_, _, "compact_demo")
-    // = /tmp/graft_fixtures/compact_demo/<sid>/<corpus-digest> (the
-    // r18-and-earlier prefix /tmp/graft_compact_demo predates the
-    // fixtureRoot move and matched NOTHING, so eviction of the memo
-    // keys silently no-opped — caught in the r19 refactor; harmless
-    // only because misses re-verify the dir on disk)
-    val prefix =
-      s"/tmp/graft_fixtures/compact_demo/${org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)}"
-    val it = compactFragWritten.iterator()
-    while (it.hasNext) {
-      val root = it.next()
-      if (root.startsWith(prefix)) {
-        it.remove()
-        val walkRoot = java.nio.file.Paths.get(root)
-        if (java.nio.file.Files.exists(walkRoot)) {
-          val w = java.nio.file.Files.walk(walkRoot)
-          try w.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach { q => java.nio.file.Files.deleteIfExists(q); () }
-          finally w.close()
-        }
-      }
-    }
   }
 
   /** Shared PSI SQL (table_drift_psi): population-stability index

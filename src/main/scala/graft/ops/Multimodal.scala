@@ -610,37 +610,23 @@ object Multimodal extends OpModule {
     }
   }
 
-  private val binFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Session-memoized directory of real PNG FILES (first `n` corpus
-    * docs rendered via [[imageBytes]], one `doc_<id>.png` each) — the
-    * raw-file landing zone a media pipeline actually ingests from,
-    * as opposed to the parquet-embedded media the other multimodal
-    * ops read. Written once per (session, corpus); bounded (n files
-    * of a few hundred bytes).
+  /** Session fixture dir ([[Memo.dir]]) of real PNG FILES (the first
+    * 64 corpus docs rendered via [[imageBytes]], one `doc_<id>.png`
+    * each) — the raw-file landing zone a media pipeline actually
+    * ingests from, as opposed to the parquet-embedded media the other
+    * multimodal ops read; a few hundred bytes per file.
     */
   private[graft] def pngFixtureDir(s: org.apache.spark.sql.SparkSession,
-      d: String, n: Int = 64): String = {
-    val root = Tables.fixtureRoot(s, d, "scan_binaryfile")
-    root.intern.synchronized {
-      if (!binFixtureWritten.contains(root) ||
-          !new java.io.File(root).exists()) {
-        import s.implicits._
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-          .filter(col("doc_id") < n).as[(Long, String)].collect()
-        val dir = new java.io.File(root)
-        dir.mkdirs()
-        docs.foreach { case (id, text) =>
-          java.nio.file.Files.write(
-            java.nio.file.Paths.get(root, s"doc_$id.png"),
-            imageBytes(text, 4, 4, "png"))
-        }
-        binFixtureWritten.add(root)
-        ()
+      d: String): String = {
+    import s.implicits._
+    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      .filter(col("doc_id") < 64)
+    Memo.dir("scan_binaryfile", docs) { root =>
+      docs.as[(Long, String)].collect().foreach { case (id, text) =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(root, s"doc_$id.png"),
+          imageBytes(text, 4, 4, "png"))
       }
     }
-    root
   }
 
   override def ops: Seq[Op] = Seq(
@@ -656,8 +642,8 @@ object Multimodal extends OpModule {
       // files partition across executors by size, nothing routes
       // through the driver, and the glob/path filters are the
       // partition pruning of unstructured data. The fixture writes
-      // the first 64 corpus docs as real PNG files once per
-      // (session, corpus); doc_id parses back out of the file name.
+      // the first 64 corpus docs as real PNG files; doc_id parses
+      // back out of the file name.
       // No oracle (binary pipeline is Spark-side only by design —
       // SURVEY §2's oracle column); MultimodalSpec pins ingested
       // bytes ≡ imageBytes and decode ≡ the in-memory pipeline.

@@ -317,13 +317,17 @@ object PipelineOps extends OpModule {
     *    earlier localCheckpoint rendering leaked every round's blocks
     *    for the session lifetime).
     */
-  /** With a `cacheKey` the labels are a session memo ([[Memo]]) keyed
-    * on `docs` and the parameters. */
+  /** The labels are a session memo ([[Memo]]) keyed on `docs` and
+    * the parameters: clustering is a multi-job iterative computation
+    * whose result a long-lived service re-reads (every "is this doc a
+    * dup of cluster X?" query), so it memoizes ONE bounded persisted
+    * frame; the memo's plan is a flat leaf over the final round, so
+    * that round's own cache entry is freed once it is built. The
+    * pairs stay lazy: this memo is their one consumer. */
   def dedupClusters(docs: DataFrame, tau: Double = 0.8,
-      shingleN: Int = 5, maxIters: Int = 25,
-      cacheKey: Option[String] = None): DataFrame = {
-    def build(): (DataFrame, DataFrame) = {
-      val pairs = LlmOps.jaccardPairs(docs, tau, shingleN)
+      shingleN: Int = 5, maxIters: Int = 25): DataFrame =
+    Memo.frameFreeing(s"ccl|t$tau|n$shingleN|i$maxIters", docs) {
+      val pairs = LlmOps.jaccardPairsUnmemoized(docs, tau, shingleN)
         .select("doc_a", "doc_b")
       val (labels, handle) =
         connectedComponentsWithHandle(pairs, maxIters = maxIters)
@@ -332,26 +336,8 @@ object PipelineOps extends OpModule {
         .withColumn("cluster_size", count(lit(1)).over(sizes))
         .select(col("node").as("doc_id"), col("lbl").as("cluster_id"),
           col("cluster_size")),
-       handle)
+       Seq(handle))
     }
-    // clustering is a multi-job iterative computation whose result a
-    // long-lived service re-reads (every "is this doc a dup of
-    // cluster X?" query), so the keyed path memoizes ONE bounded
-    // persisted frame; the memo's plan is a flat leaf over the final
-    // round, so that round's own cache entry is freed once it is built
-    cacheKey match {
-      case Some(_) =>
-        Memo.frameFreeing(s"ccl|t$tau|n$shingleN|i$maxIters", docs) {
-          val (df, handle) = build()
-          (df, Seq(handle))
-        }
-      case None =>
-        // lazy result: the caller reads through the final round's
-        // blocks, so the handle must stay alive — same contract as
-        // any lazy frame over a persisted parent
-        build()._1
-    }
-  }
 
   /** Connected components of an undirected pair list → (node, lbl)
     * with lbl = the component's minimum node id. Two regimes:
@@ -1624,8 +1610,7 @@ object PipelineOps extends OpModule {
         val clones = docs.select(
           col("doc_id").bitwiseOR(lit(1L << 40)).as("doc_id"),
           concat_ws(" ", slice(toks, lit(1), size(toks) - 1)).as("text"))
-        dedupClusters(docs.unionByName(clones), tau = 0.8, shingleN = 5,
-          cacheKey = Some(s"$d|w=droplast"))
+        dedupClusters(docs.unionByName(clones), tau = 0.8, shingleN = 5)
           .orderBy("doc_id")
       },
       Some("""WITH RECURSIVE raw AS (
@@ -1699,8 +1684,7 @@ object PipelineOps extends OpModule {
           col("doc_id").bitwiseOR(lit(1L << 40)).as("doc_id"),
           concat_ws(" ", slice(toks, lit(1), size(toks) - 1)).as("text"))
         val all = docs.unionByName(clones)
-        val labels = dedupClusters(all, tau = 0.8, shingleN = 5,
-          cacheKey = Some(s"$d|w=droplast"))
+        val labels = dedupClusters(all, tau = 0.8, shingleN = 5)
         all.select(col("doc_id"))
           .join(labels, Seq("doc_id"), "left")
           .select(col("doc_id"),

@@ -280,12 +280,11 @@ object PqOps extends OpModule {
     * full-corpus groupBy jobs; at 100 TB that is m avoidable corpus
     * passes for codebooks a 2048-vector sample determines just as
     * well. O(sampleN·D) driver bytes — the coarse-quantizer
-    * materialization class. With a `cacheKey` the codebook is a
+    * materialization class. The codebook is a
     * session memo ([[Memo]]) keyed on `emb` and the parameters, one
     * plain and one rotated; a call whose rotation differs from the
     * memoized codebook's trains a codebook of its own. */
   def pqTrain(emb: DataFrame, m: Int = 8, k: Int = 16,
-      cacheKey: Option[String] = None,
       rot: Option[Seq[Seq[Double]]] = None,
       sampleN: Int = 2048): PqCodebook = {
     def build(): PqCodebook = {
@@ -332,12 +331,8 @@ object PqOps extends OpModule {
       }
       PqCodebook(m, dSub, books, rot)
     }
-    cacheKey match {
-      case Some(_) =>
-        val cb = Memo.value(s"pq|m$m|k$k|n$sampleN|r${rot.isDefined}", emb)(build())
-        if (cb.rot == rot) cb else build()
-      case None => build()
-    }
+    val cb = Memo.value(s"pq|m$m|k$k|n$sampleN|r${rot.isDefined}", emb)(build())
+    if (cb.rot == rot) cb else build()
   }
 
   /** (vec_id, codes, cos_err): all m assignments in one codegen
@@ -396,12 +391,11 @@ object PqOps extends OpModule {
     */
   def simSearchIvfPq(emb: DataFrame, nProbes: Int, topK: Int,
       nCentroids: Int = 8, nProbe: Int = 3, m: Int = 8, k: Int = 16,
-      rerank: Int = 32, cacheKey: Option[String] = None,
-      usePackedAdc: Boolean = true,
+      rerank: Int = 32, usePackedAdc: Boolean = true,
       rot: Option[Seq[Seq[Double]]] = None): DataFrame = {
     graft.functions.VectorKernels.register(emb.sparkSession)
-    val idx = LlmOps.ivfIndex(emb, nCentroids, cacheKey)
-    val cb = pqTrain(emb, m, k, cacheKey, rot)
+    val idx = LlmOps.ivfIndex(emb, nCentroids)
+    val cb = pqTrain(emb, m, k, rot)
     val codeCol = if (usePackedAdc) "packed" else "codes"
     val enc = pqEncode(emb, cb)
       .join(idx.assign.select("vec_id", "cid"), "vec_id")
@@ -459,7 +453,7 @@ object PqOps extends OpModule {
       // pinned by PqSpec equivalence/bound tests)
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val cb = pqTrain(emb, cacheKey = Some(d))
+        val cb = pqTrain(emb)
         pqEncode(emb, cb)
           .select(col("vec_id"), concat_ws(",", col("codes")).as("codes_csv"),
             col("packed"), col("cos_err"))
@@ -475,8 +469,7 @@ object PqOps extends OpModule {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val rot = opqRotation(emb)
-        simSearchIvfPq(emb, nProbes = 50, topK = 10, cacheKey = Some(d),
-          rot = rot)
+        simSearchIvfPq(emb, nProbes = 50, topK = 10, rot = rot)
           .orderBy("p_id", "rank")
       },
       None),
@@ -498,7 +491,7 @@ object PqOps extends OpModule {
         val emb = Tables.embeddings(s, d)
         val rot = opqRotation(emb)
         simSearchIvfPq(emb, nProbes = 5, topK = 10, nCentroids = 8,
-          nProbe = 8, rerank = Int.MaxValue, cacheKey = Some(d), rot = rot)
+          nProbe = 8, rerank = Int.MaxValue, rot = rot)
           .orderBy("p_id", "rank")
       },
       Some("""WITH probes AS (
@@ -535,7 +528,7 @@ object PqOps extends OpModule {
       (s, d) => {
         val emb = Tables.embeddings(s, d)
         val rot = opqRotation(emb)
-        val cb = pqTrain(emb, cacheKey = Some(d), rot = rot)
+        val cb = pqTrain(emb, rot = rot)
         pqEncode(emb, cb)
           .select(col("vec_id"), col("packed"), col("cos_err"),
             lit(rot.isDefined).as("rotated"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Op, OpModule, Tables}
+import graft.{Memo, Op, OpModule, Tables}
 import org.apache.spark.sql.functions._
 
 /** Scans, projections, filters, casts, null handling, sort/limit and
@@ -58,25 +58,6 @@ object Relational extends OpModule {
     f
   }
 
-  /** Session-scoped roots whose hive-partitioned events fixture has
-    * been written — memoized only AFTER a successful write (the
-    * layout_compact pattern: a failed write must retry, never feed
-    * the scan a partial layout); misses re-verify the dir on disk. */
-  private val partFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Same memo discipline for the schema-evolution fixture. */
-  private val evolveFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Same memo discipline for the ORC fixture. */
-  private val orcFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Same memo discipline for the JDBC (embedded Derby) fixture. */
-  private val jdbcFixtureWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   override def ops: Seq[Op] = Seq(
     // ── §2.1 scans ────────────────────────────────────────────────
     Op("scan_parquet",
@@ -104,25 +85,16 @@ object Relational extends OpModule {
       // pruning: a 100 TB table is laid out by its hottest predicate
       // column, and a query on that column must never list (let alone
       // read) the other partitions' files. The fixture is a
-      // partitioned copy of events written once per (session, corpus)
-      // — session-scoped root so SF runs never race each other — and
-      // the read back filters ONE partition; PlanSpec pins that the
+      // partitioned copy of events ([[Memo.dir]]), and the read back
+      // filters ONE partition; PlanSpec pins that the
       // predicate lands in PartitionFilters (pruning), not in the
       // data filters. The oracle reads the ORIGINAL events table:
       // same rows by construction.
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "scan_partitioned")
-        root.intern.synchronized {
-          if (!partFixtureWritten.contains(root) ||
-              !new java.io.File(root).exists()) {
-            Tables.events(s, d)
-              .select("event_id", "user_id", "value", "event_type")
-              .write.partitionBy("event_type")
-              .mode("overwrite").parquet(root)
-            partFixtureWritten.add(root)
-            ()
-          }
-        }
+        val ev = Tables.events(s, d)
+          .select("event_id", "user_id", "value", "event_type")
+        val root = Memo.dir("scan_partitioned", ev)(
+          ev.write.partitionBy("event_type").mode("overwrite").parquet(_))
         s.read.parquet(root)
           .filter(col("event_type") === "purchase")
           .select("event_id", "user_id", "value")
@@ -135,8 +107,8 @@ object Relational extends OpModule {
       // schema-drift read: a long-lived table accretes columns, and
       // files written BEFORE the ADD lack them — the reader must
       // union the schemas and backfill NULL, not fail or silently
-      // drop the column. Fixture = two generations of nation written
-      // once per (session, corpus): v1 (keys < 13) without
+      // drop the column. Fixture = two generations of nation
+      // ([[Memo.dir]]): v1 (keys < 13) without
       // n_regionkey, v2 (keys ≥ 13) with it; the read is
       // mergeSchema=true over both. mergeSchema costs a footer pass
       // per file — at 100 TB you pin the evolved schema in the
@@ -145,20 +117,14 @@ object Relational extends OpModule {
       // DISCOVERY path. Oracle reconstructs the same relation from
       // the original table (v1 rows get NULL region by construction).
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "scan_evolve")
-        root.intern.synchronized {
-          if (!evolveFixtureWritten.contains(root) ||
-              !new java.io.File(root).exists()) {
-            val n = Tables.nation(s, d)
-            n.filter(col("n_nationkey") < 13)
-              .select("n_nationkey", "n_name")
-              .write.mode("overwrite").parquet(s"$root/v1")
-            n.filter(col("n_nationkey") >= 13)
-              .select("n_nationkey", "n_name", "n_regionkey")
-              .write.mode("overwrite").parquet(s"$root/v2")
-            evolveFixtureWritten.add(root)
-            ()
-          }
+        val n = Tables.nation(s, d)
+        val root = Memo.dir("scan_schema_evolution", n) { root =>
+          n.filter(col("n_nationkey") < 13)
+            .select("n_nationkey", "n_name")
+            .write.mode("overwrite").parquet(s"$root/v1")
+          n.filter(col("n_nationkey") >= 13)
+            .select("n_nationkey", "n_name", "n_regionkey")
+            .write.mode("overwrite").parquet(s"$root/v2")
         }
         s.read.option("mergeSchema", "true")
           .parquet(s"$root/v1", s"$root/v2")
@@ -383,23 +349,22 @@ object Relational extends OpModule {
     // VISIBILITY (every committed row, no duplicate, no torn file),
     // not just the protocol invariants the spec asserts. The derive
     // step shifts keys and prefixes names so a stale or partial file
-    // from any other fixture cannot alias the expected bytes.
+    // from any other fixture cannot alias the expected bytes. The
+    // written file is a session fixture ([[Memo.dir]]): a shared
+    // hard-coded /tmp file races when two sessions run concurrently
+    // on one host (ADVICE r18), and the oracle never reads it.
     Op("scan_dsv2_roundtrip",
       (s, d) => {
-        // (session, corpus)-keyed path (ADVICE r18): a shared
-        // hard-coded /tmp file races when two sessions run
-        // concurrently on one host — one overwrites while the other
-        // reads. The oracle never touches this path (it recomputes
-        // the relation from the source table), so keying is free.
-        val path =
-          s"${Tables.fixtureRoot(s, d, "dsv2_roundtrip")}/nation_v2_roundtrip.csv"
-        Tables.nation(s, d)
+        val derived = Tables.nation(s, d)
           .select(
             (col("n_nationkey") + 100).cast("long").as("n_nationkey"),
             concat(lit("V2_"), col("n_name")).as("n_name"),
             (col("n_regionkey") * 2 + 1).cast("long").as("n_regionkey"))
-          .write.format("graft.sources.GraftFixtureSource")
-          .option("path", path).mode("overwrite").save()
+        val path = Memo.dir("scan_dsv2_roundtrip", derived) { root =>
+          derived.write.format("graft.sources.GraftFixtureSource")
+            .option("path", s"$root/nation_v2_roundtrip.csv")
+            .mode("overwrite").save()
+        } + "/nation_v2_roundtrip.csv"
         s.read.format("graft.sources.GraftFixtureSource")
           .option("path", path).load()
           .filter(col("n_regionkey") >= 3)
@@ -416,8 +381,7 @@ object Relational extends OpModule {
       // ORC scan surface (SURVEY row 7h) — the other columnar format
       // Spark ships natively; a meepo-adjacent warehouse is as likely
       // to hand us ORC (Hive lineage) as parquet. Fixture = an ORC
-      // copy of events written once per (session, corpus) under the
-      // shared fixtureRoot keying; the read back is the 100 TB
+      // copy of events ([[Memo.dir]]); the read back is the 100 TB
       // discipline end-to-end: EXPLICIT schema (no footer-inference
       // pass over the fleet of files), predicate pushed to the ORC
       // reader (ORC carries per-stripe min/max + optional bloom
@@ -428,17 +392,9 @@ object Relational extends OpModule {
       // events: same rows by construction, so the hash gate proves
       // the ORC round-trip is value-exact (incl. the double column).
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "scan_orc")
-        root.intern.synchronized {
-          if (!orcFixtureWritten.contains(root) ||
-              !new java.io.File(root).exists()) {
-            Tables.events(s, d)
-              .select("event_id", "user_id", "value", "event_type")
-              .write.mode("overwrite").orc(root)
-            orcFixtureWritten.add(root)
-            ()
-          }
-        }
+        val ev = Tables.events(s, d)
+          .select("event_id", "user_id", "value", "event_type")
+        val root = Memo.dir("scan_orc", ev)(ev.write.mode("overwrite").orc(_))
         s.read
           .schema("event_id BIGINT, user_id BIGINT, value DOUBLE, event_type STRING")
           .orc(root)
@@ -467,27 +423,21 @@ object Relational extends OpModule {
       // value-exact, doubles included; Derby uppercases identifiers,
       // so the projection restores the oracle's lowercase names.
       (s, d) => {
-        val root = Tables.fixtureRoot(s, d, "scan_jdbc")
-        val url = s"jdbc:derby:$root/db;create=true"
+        // the embedded database lives in a session fixture dir ([[Memo.dir]])
+        def url(root: String) = s"jdbc:derby:$root/db;create=true"
         val props = new java.util.Properties()
         props.put("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-        root.intern.synchronized {
-          if (!jdbcFixtureWritten.contains(root) ||
-              !new java.io.File(s"$root/db").exists()) {
-            Tables.customer(s, d)
-              .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
-              .write.mode("overwrite")
-              .option("createTableColumnTypes",
-                "c_name VARCHAR(64)")
-              .jdbc(url, "CUSTOMER", props)
-            jdbcFixtureWritten.add(root)
-            ()
-          }
+        val cust = Tables.customer(s, d)
+          .select("c_custkey", "c_name", "c_nationkey", "c_acctbal")
+        val root = Memo.dir("scan_jdbc", cust) { root =>
+          cust.write.mode("overwrite")
+            .option("createTableColumnTypes", "c_name VARCHAR(64)")
+            .jdbc(url(root), "CUSTOMER", props)
         }
         val bounds = Tables.customer(s, d)
           .agg(min("c_custkey"), max("c_custkey")).head()
         s.read.format("jdbc")
-          .option("url", url)
+          .option("url", url(root))
           .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
           .option("dbtable", "CUSTOMER")
           .option("partitionColumn", "C_CUSTKEY")

@@ -56,19 +56,18 @@ object Bridge {
       org.apache.spark.sql.catalyst.optimizer.InlineCTE(alwaysInline = true)
         .apply(df.queryExecution.analyzed))
 
-  /** Whether CacheManager would serve `df` from a cached relation —
-    * the memo-engagement probe (`private[sql]` in Spark 4). */
-  def isCached(df: DataFrame): Boolean = {
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds).isDefined
+  /** The catalog tables, in every database, whose storage location
+    * lies under `dir` — as quoted `db`.`table` names. */
+  def tablesUnder(spark: SparkSession, dir: String): Seq[String] = {
+    val ext = spark.asInstanceOf[classic.SparkSession].sharedState.externalCatalog
+    val root = java.nio.file.Paths.get(dir)
+    for {
+      db <- ext.listDatabases()
+      t <- ext.listTables(db)
+      if ext.getTable(db, t).storage.locationUri.exists(u =>
+        Option(u.getPath).exists(java.nio.file.Paths.get(_).startsWith(root)))
+    } yield s"`$db`.`$t`"
   }
-
-  /** The analyzed plan AFTER CacheManager substitution — where a
-    * memoized view either becomes InMemoryRelation or silently
-    * doesn't (`withCachedData` is `private[sql]`-adjacent detail the
-    * diag tooling needs). */
-  def withCachedData(df: DataFrame): LogicalPlan =
-    df.queryExecution.withCachedData
 
   /** Re-wrap a DataFrame's rows as a flat LogicalRDD leaf WITHOUT the
     * InternalRow → Row → InternalRow round-trip that

@@ -391,7 +391,7 @@ class LlmSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val curve = Seq(1, 2, 4, 8).map { nProbe =>
       val got = LlmOps.simSearchIvf(emb, nProbes = 5, topK = 10,
-          nCentroids = 8, nProbe = nProbe, cacheKey = Some("recall-curve"))
+          nCentroids = 8, nProbe = nProbe)
         .select("p_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       nProbe -> (got & exact).size.toDouble / exact.size
@@ -494,7 +494,7 @@ class LlmSpec extends SparkSpec {
       zip_with(ed, reverse(ed),
         (x, y) => lit(0.9) * x + lit(0.1) * y).as("embedding"))
     val u = base.unionByName(clones)
-    val out = LlmOps.semDedup(u, tau = 0.8, cacheKey = None)
+    val out = LlmOps.semDedup(u, tau = 0.8)
     val rows = out.collect()
     val n = u.count()
     assert(rows.length == n, "one verdict per input vector")
@@ -546,7 +546,7 @@ class LlmSpec extends SparkSpec {
     val cap = 8
     // (a) the cap is enforced on the refined assignment itself
     val c = math.max(8L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
-    val idx = LlmOps.ivfIndex(u, c, cacheKey = None)
+    val idx = LlmOps.ivfIndex(u, c)
     val refined = LlmOps.subSplitAssign(idx.assign, cap)
     assert(!(refined eq idx.assign),
       s"cap $cap below natural cluster size must trigger a split")
@@ -560,8 +560,7 @@ class LlmSpec extends SparkSpec {
     // contract: no false drops (precision 1.0 against the 0.62
     // background margin), recall >= 0.9 (a clone is missed only when
     // sub-Lloyd separates it from its source — rare at cos 0.994)
-    val out = LlmOps.semDedup(u, tau = 0.8, cacheKey = None,
-      maxClusterSize = cap)
+    val out = LlmOps.semDedup(u, tau = 0.8, maxClusterSize = cap)
     val rows = out.collect()
     assert(rows.length == n, "one verdict per input vector")
     val dropped = rows.filter(_.getBoolean(1)).map(_.getLong(0))
@@ -604,7 +603,6 @@ class LlmSpec extends SparkSpec {
     val ranked = LlmOps.boilerplateRank(docs, minShared = 1)
     val rows = ranked.orderBy(col("pr").desc, col("doc_id").asc)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    ranked.unpersist() // None-cacheKey contract: caller owns the frame
     assert(rows.nonEmpty, "planted structure must produce a graph")
     // the template source is THE top document, by a real margin
     assert(rows.head._1 == 0L,

@@ -5,9 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The session memo registry ([[Memo]]): keyed on its input frames,
-  * one build per key under concurrency, deterministic builds only, and
-  * `Memo.clear` at any point changes no result. Each test runs in its
-  * own session so its entries are its own. */
+  * one build per key under concurrency, deterministic builds only,
+  * directories that heal and never outlive a failed write, and
+  * `Memo.clear` at any point changes no result and leaves no directory
+  * or catalog table behind. Each test runs in its own session so its
+  * entries are its own. */
 class MemoSpec extends SparkSpec {
 
   private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -36,7 +38,19 @@ class MemoSpec extends SparkSpec {
   private def builds(err: java.io.ByteArrayOutputStream, tag: String): Int =
     err.toString("UTF-8").linesIterator.count(_.startsWith(s"graft: memo $tag built in "))
 
-  test("memo keys on its input frames: same cacheKey, different docs, each call gets its own pairs") {
+  private val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+
+  /** The `graft_` children of the system temp dir. */
+  private def graftTemp: Set[java.io.File] =
+    tmp.listFiles().filter(_.getName.startsWith("graft_")).toSet
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+    ()
+  }
+
+  test("memo keys on its input frames: different docs each get their own pairs") {
     val s = spark.newSession()
     import s.implicits._
     val fox = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -45,14 +59,18 @@ class MemoSpec extends SparkSpec {
     val b = Seq((1L, lorem), (2L, fox), (3L, lorem + " again")).toDF("doc_id", "text")
     def pairs(df: DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ops: Seq[(String, (DataFrame, Option[String]) => DataFrame)] = Seq(
-      "jaccard" -> ((d, k) => LlmOps.jaccardPairs(d, tau = 0.6, shingleN = 3, cacheKey = k)),
-      "containment" -> ((d, k) => LlmOps.containmentPairs(d, tau = 0.6, shingleN = 3,
-        maxPostingDf = Some(16L), cacheKey = k)))
+    val ops: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "jaccard" -> (d => LlmOps.jaccardPairs(d, tau = 0.6, shingleN = 3)),
+      "containment" -> (d => LlmOps.containmentPairs(d, tau = 0.6, shingleN = 3,
+        maxPostingDf = Some(16L))))
+    // each call against the same call made first after a clear, which
+    // builds from its own docs whatever the keying
     try for ((name, op) <- ops) {
-      val (ka, kb) = (pairs(op(a, Some("corpus"))), pairs(op(b, Some("corpus"))))
-      assert(ka == pairs(op(a, None)), s"$name: keyed call on docs a")
-      assert(kb == pairs(op(b, None)), s"$name: keyed call on docs b read docs a's memo")
+      val (ka, kb) = (pairs(op(a)), pairs(op(b)))
+      Memo.clear(s)
+      assert(kb == pairs(op(b)), s"$name: the call on docs b read docs a's memo")
+      Memo.clear(s)
+      assert(ka == pairs(op(a)), s"$name: the call on docs a read docs b's memo")
       assert(ka != kb, s"$name: the two inputs must have different pairs")
     } finally Memo.clear(s)
   }
@@ -78,7 +96,7 @@ class MemoSpec extends SparkSpec {
       val emb = Tables.embeddings(s, sf001)
       val before1 = persistedRdds
       val err1 = new java.io.ByteArrayOutputStream()
-      val idx = concurrently(n, err1)(LlmOps.ivfIndex(emb, 8, Some("k")))
+      val idx = concurrently(n, err1)(LlmOps.ivfIndex(emb, 8))
       assert(builds(err1, "ivf|c8") == 1 && builds(err1, "ivfassign|c8") == 1,
         err1.toString("UTF-8"))
       assert(idx.forall(_ eq idx.head))
@@ -88,14 +106,22 @@ class MemoSpec extends SparkSpec {
       val before2 = persistedRdds
       val err2 = new java.io.ByteArrayOutputStream()
       concurrently(n, err2)(SparkEntry.queries("llm_vector_opq")(s, sf001))
-      val cbs = concurrently(n, err2)(PqOps.pqTrain(emb, cacheKey = Some("k")))
+      val cbs = concurrently(n, err2)(PqOps.pqTrain(emb))
       assert(builds(err2, "opq") == 1, err2.toString("UTF-8"))
       assert(builds(err2, "pq|m8|k16|n2048|rtrue") == 1)
       assert(builds(err2, "pq|m8|k16|n2048|rfalse") == 1)
       assert(cbs.forall(_ eq cbs.head))
       assert((persistedRdds -- before2).isEmpty)
+
+      // a fixture query: one write into one directory
+      val before3 = graftTemp
+      val err3 = new java.io.ByteArrayOutputStream()
+      val rows = concurrently(n, err3)(rowsOf(SparkEntry.queries("scan_orc")(s, sf001)))
+      assert(builds(err3, "scan_orc") == 1, err3.toString("UTF-8"))
+      assert((graftTemp -- before3).size == 1, graftTemp -- before3)
+      assert(rows.forall(_ == rows.head) && rows.head.nonEmpty)
       assert(Memo.tags(s).sorted == Seq("ivf|c8", "ivfassign|c8", "opq",
-        "pq|m8|k16|n2048|rfalse", "pq|m8|k16|n2048|rtrue", "probe").sorted)
+        "pq|m8|k16|n2048|rfalse", "pq|m8|k16|n2048|rtrue", "probe", "scan_orc").sorted)
     } finally Memo.clear(s)
   }
 
@@ -109,27 +135,99 @@ class MemoSpec extends SparkSpec {
     } finally Memo.clear(s)
   }
 
+  test("a Memo.dir deleted from outside is rebuilt on next use") {
+    val s = spark.newSession()
+    val df = s.range(10).toDF("id")
+    val writes = new java.util.concurrent.atomic.AtomicInteger()
+    def fixture(): String = Memo.dir("probe_dir", df) { d =>
+      writes.incrementAndGet()
+      df.write.mode("overwrite").parquet(d)
+    }
+    try {
+      val d1 = fixture()
+      assert(fixture() == d1 && writes.get == 1)
+      deleteTree(new java.io.File(d1))
+      val d2 = fixture()
+      assert(writes.get == 2 && d2 != d1)
+      assert(s.read.parquet(d2).count() == 10)
+      // a registered fixture query heals the same way
+      val q = SparkEntry.queries("scan_partitioned")
+      val before = graftTemp
+      val first = rowsOf(q(s, sf001))
+      val made = graftTemp -- before
+      assert(made.size == 1, made)
+      made.foreach(deleteTree)
+      assert(rowsOf(q(s, sf001)) == first)
+      val remade = graftTemp -- before
+      assert(remade.size == 1 && remade != made, remade)
+    } finally Memo.clear(s)
+  }
+
+  test("a Memo.dir write that throws leaves no dir, and the next call writes one") {
+    val s = spark.newSession()
+    val df = s.range(10).toDF("id")
+    try {
+      var seen = ""
+      val e = intercept[IllegalStateException](Memo.dir("flaky", df) { d =>
+        seen = d
+        df.write.mode("overwrite").parquet(d)
+        throw new IllegalStateException("disk full")
+      })
+      assert(e.getMessage == "disk full")
+      assert(seen.nonEmpty && !new java.io.File(seen).exists(), seen)
+      val ok = Memo.dir("flaky", df)(df.write.mode("overwrite").parquet(_))
+      assert(ok != seen && s.read.parquet(ok).count() == 10)
+    } finally Memo.clear(s)
+  }
+
   test("Memo.clear changes no result: every memo-building registered query reruns identically") {
     val s: SparkSession = spark.newSession()
+    def graftTables: Set[String] = s.catalog.listTables().collect()
+      .filter(t => !t.isTemporary && t.name.startsWith("graft_")).map(_.name).toSet
     // every registered query whose construction registers a memo entry:
-    // run it, clear, run it again
+    // run it, clear, check nothing it made survives, run it again
     val memoized = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (q, fn) =>
-      val before = persistedRdds
+      val (before, beforeDirs, beforeTables) = (persistedRdds, graftTemp, graftTables)
       val df = fn(s, sf001)
       if (Memo.tags(s).isEmpty) None
       else {
         val first = rowsOf(df)
+        val dirs = graftTemp -- beforeDirs
         Memo.clear(s)
         assert(Memo.tags(s).isEmpty)
         assert((persistedRdds -- before).isEmpty,
           s"$q: cached RDDs outlive Memo.clear: ${persistedRdds -- before}")
+        assert(dirs.forall(!_.exists()), s"$q: dirs outlive Memo.clear: $dirs")
+        assert((graftTables -- beforeTables).isEmpty,
+          s"$q: catalog tables outlive Memo.clear: ${graftTables -- beforeTables}")
         val again = rowsOf(fn(s, sf001))
         Memo.clear(s)
         assert(first == again, s"$q: result changed across Memo.clear")
-        Some(q)
+        Some(q -> dirs.nonEmpty)
       }
     }
-    info(s"${memoized.size} memo-building queries: ${memoized.mkString(", ")}")
+    info(s"${memoized.size} memo-building queries: ${memoized.map(_._1).mkString(", ")}")
     assert(memoized.size >= 30, memoized)
+    val fixtures = Set("scan_partitioned", "scan_schema_evolution", "scan_orc", "scan_jdbc",
+      "scan_dsv2_roundtrip", "join_bucketed", "layout_compact", "layout_compact_digest",
+      "scan_avro", "cdc_binlog_roundtrip", "scan_binaryfile", "llm_ivf_append_probe")
+    assert(fixtures.subsetOf(memoized.collect { case (q, true) => q }.toSet), memoized)
+  }
+
+  test("src/main hand-rolls no session memo: no interned locks, key sets, fixture roots or session ids") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val anywhere = Seq("intern.synchronized", "newKeySet", "/tmp/graft_fixtures")
+    // the registry and the private[sql] shim own the session identity
+    def banned(file: String, line: String) = anywhere.exists(line.contains) ||
+      (line.contains("sessionUUID") && file != "Memo.scala" && file != "Bridge.scala")
+    val w = java.nio.file.Files.walk(root)
+    val hits = try w.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+      java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if banned(p.getFileName.toString, l) => s"$p:${i + 1}: ${l.trim}"
+      }
+    }.toList finally w.close()
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

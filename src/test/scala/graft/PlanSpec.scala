@@ -148,24 +148,26 @@ class PlanSpec extends SparkSpec {
       s"bucketed join still shuffles a side:\n$p")
   }
 
-  test("evictFixtures tears down this session's fixture dirs + catalog tables; next use heals by rewriting") {
-    // materialize the bucketed fixture (and any other fixture ops'
-    // scratch) for this session
-    SparkEntry.queries("join_bucketed")(spark, sf001).collect()
-    val root = new java.io.File(Tables.fixtureRoot(spark, sf001, "bucketed"))
-      .getParentFile // the per-session dir that evict deletes
-    assert(root.isDirectory, s"fixture dir missing before evict: $root")
-    val sidTag = org.apache.spark.sql.graftbridge.Bridge.sessionUUID(spark)
-      .replace("-", "").take(12)
-    assert(spark.catalog.listTables().collect()
-      .exists(t => t.name.startsWith("graft_") && t.name.contains(sidTag)))
-    Tables.evictFixtures(spark)
-    assert(!root.exists(), s"fixture dir survived evict: $root")
-    assert(!spark.catalog.listTables().collect()
-      .exists(t => t.name.startsWith("graft_") && t.name.contains(sidTag)))
-    // the op double-checks the PATH on entry, so the next run rewrites
-    val again = SparkEntry.queries("join_bucketed")(spark, sf001).collect()
-    assert(again.nonEmpty)
+  test("Memo.clear tears down fixture dirs + catalog tables; next use heals by rewriting") {
+    val s = spark.newSession()
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    try {
+      val df = SparkEntry.queries("join_bucketed")(s, sf001)
+      // the fixture dir: the temp-dir child holding the tables' files
+      val dirs = df.inputFiles.map(f => java.nio.file.Paths.get(new java.net.URI(f)))
+        .filter(_.startsWith(tmp)).map(p => tmp.resolve(tmp.relativize(p).getName(0)).toFile)
+        .toSet
+      assert(dirs.size == 1 && dirs.head.isDirectory, dirs)
+      def tables = s.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith(dirs.head.getName)).toSeq
+      assert(tables.size == 2, tables)
+      val rows = df.collect().toSeq
+      Memo.clear(s)
+      assert(!dirs.head.exists(), s"fixture dir survived Memo.clear: ${dirs.head}")
+      assert(tables.isEmpty, tables)
+      // the next call writes a fresh fixture
+      assert(SparkEntry.queries("join_bucketed")(s, sf001).collect().toSeq == rows)
+    } finally Memo.clear(s)
   }
 
   test("agg_hash_group: partial (map-side) + final hash aggregation") {

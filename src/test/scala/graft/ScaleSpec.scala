@@ -173,7 +173,7 @@ class ScaleSpec extends SparkSpec {
     // only its probed buckets — never a full-corpus read
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sf001)
-    val idx = graft.ops.LlmOps.ivfIndex(emb, nCentroids = 8, cacheKey = None)
+    val idx = graft.ops.LlmOps.buildIvfIndex(emb, nCentroids = 8)
     val dir = tmpDir("graft_ivf_table")
     idx.assign.write.mode("overwrite").partitionBy("cid").parquet(dir)
     val table = spark.read.parquet(dir)
@@ -200,7 +200,7 @@ class ScaleSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.ops.LlmOps
     val emb = Tables.embeddings(spark, sf001)
-    val idx = LlmOps.ivfIndex(emb, nCentroids = 8, cacheKey = None)
+    val idx = LlmOps.buildIvfIndex(emb, nCentroids = 8)
     val dir = tmpDir("graft_ivf_full")
     LlmOps.writeIvfIndex(idx, dir)
     val disk = LlmOps.loadIvfIndex(spark, dir)
@@ -239,7 +239,7 @@ class ScaleSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") % 5 =!= 0)
     val batch = emb.filter(col("vec_id") % 5 === 0)
     val dir = tmpDir("graft_ivf_append")
-    LlmOps.writeIvfIndex(LlmOps.ivfIndex(base, nCentroids = 8, cacheKey = None), dir)
+    LlmOps.writeIvfIndex(LlmOps.buildIvfIndex(base, nCentroids = 8), dir)
     val drift = LlmOps.appendIvfIndex(spark, dir, batch)
     assert(drift >= 0.0 && drift <= 1.0, s"drift signal out of range: $drift")
     info(f"drift signal (batch fraction outside old alpha_max): $drift%.3f")
@@ -287,9 +287,9 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("cloneDirByLink: clone probes identically; appending to the clone leaves the source index untouched") {
-    // r9: llm_ivf_append_probe memoizes the base-index BUILD per
-    // (session, corpus) and hardlink-clones the files into a fresh
-    // scratch dir per run. Two contracts make that safe: (1) the clone
+    // r9: llm_ivf_append_probe writes the base index once per session
+    // (Memo.dir) and hardlink-clones the files into a fresh run dir
+    // per run. Two contracts make that safe: (1) the clone
     // is byte-identical — loading it probes exactly like the source;
     // (2) append mutates the CLONE only (new files + replaced
     // directory entries), so the memoized source keeps serving
@@ -300,7 +300,7 @@ class ScaleSpec extends SparkSpec {
     val base = emb.filter(col("vec_id") % 5 =!= 0)
     val batch = emb.filter(col("vec_id") % 5 === 0)
     val src = tmpDir("graft_ivf_clone_src")
-    LlmOps.writeIvfIndex(LlmOps.ivfIndex(base, nCentroids = 8, cacheKey = None), src)
+    LlmOps.writeIvfIndex(LlmOps.buildIvfIndex(base, nCentroids = 8), src)
     val srcIdx = LlmOps.loadIvfIndex(spark, src)
     val probes = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("p_id"),

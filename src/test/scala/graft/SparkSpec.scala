@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local[4] session for every suite (spark_guide.md:177-190). */
@@ -18,7 +19,7 @@ object TestSession {
   }
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSession.spark
   val sf001 = "/root/testdata/sf0.001"
   val sf01 = "/root/testdata/sf0.01"
@@ -27,4 +28,12 @@ trait SparkSpec extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Drop the memo entries this suite made in the shared session: its
+    * cached frames, fixture dirs and their catalog tables. Spark's
+    * cache manager is shared across sessions, so a frame left cached
+    * here would turn a later suite's persist of the same plan into a
+    * no-op. */
+  override def afterAll(): Unit =
+    try Memo.clear(spark) finally super.afterAll()
 }
