@@ -1,198 +1,102 @@
 package graft
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main (driver contract): runs every registered query on
-  * `SPARK_GRAFT_SF_DIR` and emits ONE JSON line on stdout. Round-2
-  * hardening (VERDICT.md "What's wrong" #4 / "Next round" #7):
-  *  - the JSON is ALSO written to a file (`SPARK_GRAFT_BENCH_OUT`,
-  *    default `BENCH_LOCAL.json` in the cwd) so sbt log noise around
-  *    the stdout line can't cost the gate signal;
-  *  - a query that throws is recorded as `"<name>": -1` plus an entry
-  *    in an `"errors"` object (name → exception) and a stderr line —
-  *    failures are loud, never a silently-near-zero time;
-  *  - r5: the full sweep runs TWICE (cold, then warm) and the headline
-  *    `value` is the per-query min-sum, with the cold pass disclosed
-  *    verbatim (`value_cold` / `queries`) — BASELINE.md's own
-  *    repeat-and-min recommendation, adopted after driver r4 showed
-  *    ±3-8× box-load swings landing on untouched trivial queries.
+/** Benchmark main (driver contract): times every registered query's
+  * full result ([[Harness.time]]) on `SPARK_GRAFT_SF_DIR` in two whole
+  * passes, cold then warm, and scores each query by its faster pass.
+  * The cold pass carries every one-time cost (code generation, session
+  * memo builds) and is reported as well.
+  *
+  * Stdout carries two JSON lines: [[queriesLine]], then the summary of
+  * [[Run.summary]] as the last line. The file `SPARK_GRAFT_BENCH_OUT`
+  * (default `BENCH_LOCAL.json`) holds the summary, both passes, the
+  * per-query minimum and the errors ([[Run.report]]). A query that
+  * throws is timed -1, named in `errors` and on stderr, and left out of
+  * every total; the exit code is then 1.
   */
 object Bench {
-  // surfaced in a dedicated "steady" section (= their pass-2 time):
-  // the per-query marginal cost once one-time codegen / the session-
-  // lifetime IVF index exists — the figure a long-lived service sees.
-  // Nothing is pre-warmed: pass 1 carries every one-time cost and is
-  // disclosed verbatim as `value_cold`/`queries`.
-  private val SteadyReport = Seq("llm_dedup_simhash", "llm_multimodal_decode",
-    "llm_simsearch", "llm_simsearch_ivf")
+
+  /** The most bytes the `queries` line may take, so that a bounded tail
+    * capture of the run log keeps it and the summary line whole. */
+  val QueriesLineMax = 1500
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the session once (scan + shuffle + codegen machinery) so the
-    // ~5-10s JVM cold-start doesn't land on whichever query happens to
-    // iterate first and distort its number
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
+    val queries = Harness.select(Nil)
+    Harness.session { spark =>
+      warmUp(spark, sfDir)
+      val errors = collection.mutable.LinkedHashMap[String, String]()
+      def sweep(pass: Int): Map[String, Double] = ListMap(queries.map { case (name, fn) =>
+        name -> (try Harness.time(fn(spark, sfDir)) catch {
+          case e: Throwable =>
+            errors(s"p$pass:$name") = e.toString
+            System.err.println(s"[bench] FAILED p$pass:$name: $e")
+            -1.0
+        })
+      }: _*)
+      val run = Run(sfDir, sweep(1), sweep(2), ListMap.from(errors))
+      println(queriesLine(run.best))
+      println(Harness.json(run.summary))
+      try Files.writeString(Paths.get(out), Harness.json(run.report))
+      catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
+      errors.isEmpty
+    }
+  }
+
+  /** Runs a scan, a shuffle and the custom kernels once, so the JVM's
+    * start-up cost does not land on whichever query runs first. */
+  private def warmUp(spark: SparkSession, sfDir: String): Unit =
     try {
-      val w = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      w.groupBy("l_returnflag").count().count()
-      // pre-trigger the custom kernels' generated-code path once too
+      spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().collect()
       graft.functions.VectorKernels.register(spark)
       spark.range(1).selectExpr(
         "graft_simhash_text(array('a','b')) AS a",
         "graft_minhash(array('a','b'), 16) AS b",
         "graft_dot(array(1.0d), array(1.0d)) AS c",
         "graft_best_centroid(array(1.0d), array(array(1.0d))) AS d",
-        "graft_rpbands(array(1.0d), 16, 24, 7) AS e").count()
+        "graft_rpbands(array(1.0d), 16, 24, 7) AS e").collect()
     } catch { case _: Throwable => () }
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // JSON-safe: escape backslashes FIRST (an AnalysisException quoting
-    // a regex like \s+ would otherwise emit an invalid escape — ADVICE
-    // r2), then quotes/newlines, then any remaining control chars
-    def jsonSafe(s: String): String = s
-      .replaceAll("\\\\", " ")
-      .replaceAll("[\"\\n\\r]", " ")
-      .replaceAll("[\\x00-\\x1f]", " ")
-      .take(200)
-    def timed(name: String, run: () => Unit): Double = {
-      val t0 = System.nanoTime()
-      try { run(); (System.nanoTime() - t0) / 1e9 }
-      catch {
-        case e: Throwable =>
-          errors(name) = jsonSafe(e.toString)
-          System.err.println(s"[bench] FAILED $name: $e")
-          -1.0
-      }
-    }
 
-    // Repeat-and-min (BASELINE.md's own recommendation, adopted after
-    // the r4 driver run showed box-load swings landing on untouched
-    // trivial queries): the FULL sweep runs twice, cold then warm.
-    // Everything is disclosed — `queries` is the cold pass verbatim
-    // (incl. one-time IVF index build and first-plan compile),
-    // `queries_min` is the per-query min of the two passes, and the
-    // headline `value` is the min-sum. No hidden pre-warming: pass 1
-    // still pays every one-time cost, it is just reported separately
-    // from the per-query marginal cost a long-lived service sees.
-    def sweep(pass: Int): Map[String, Double] =
-      SparkEntry.queries.map { case (name, fn) =>
-        name -> timed(s"p$pass:$name", () => { fn(spark, sfDir).count(); () })
-      }
-    val cold = sweep(1)
-    val warm = sweep(2)
-    val minQ = cold.map { case (k, v) =>
-      // a -1 error marker never wins the min; if both passes failed the
-      // query stays -1 and is excluded from every total below
+  /** Both passes of one run: seconds per query, -1 where it threw;
+    * `errors` maps `p<pass>:<name>` to the exception. */
+  final case class Run(sf: String, cold: Map[String, Double], warm: Map[String, Double],
+      errors: Map[String, String]) {
+
+    /** Each query's faster pass; -1 where both threw. */
+    val best: Map[String, Double] = cold.map { case (k, c) =>
       val w = warm.getOrElse(k, -1.0)
-      k -> ((v, w) match {
-        case (a, b) if a >= 0 && b >= 0 => math.min(a, b)
-        case (a, _) if a >= 0 => a
-        case (_, b) => b
-      })
+      k -> (if (c < 0) w else if (w < 0) c else math.min(c, w))
     }
-    val steady = SteadyReport.filter(warm.contains).map(n => n -> warm(n))
-    // per-query SPREAD (max/min across the two passes) — the box-noise
-    // discriminator (VERDICT r8 #5): uniform spread across untouched
-    // queries = loaded box; an isolated spread on a changed query = a
-    // real regression. Full map in the file report; stdout (bounded
-    // tail capture) carries the median/max summary only.
-    val spread = minQ.keys.map { k =>
-      val c = cold.getOrElse(k, -1.0); val w = warm.getOrElse(k, -1.0)
-      k -> (if (c > 0 && w > 0) math.max(c, w) / math.min(c, w) else -1.0)
-    }.toMap
-    val validSpreads = spread.values.filter(_ >= 0).toSeq.sorted
-    val spreadP50 =
-      if (validSpreads.isEmpty) -1.0 else validSpreads(validSpreads.size / 2)
-    val spreadMax = if (validSpreads.isEmpty) -1.0 else validSpreads.last
 
-    def obj(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    // the stdout line must survive a bounded tail capture of the run
-    // log (observed ~4 KB: two full-precision 91-query maps overflowed
-    // it in r5/r6 and the driver recorded parsed:null) — so stdout
-    // carries ONE per-query map at 3-decimal precision and the file
-    // report keeps both passes verbatim at full precision
-    def obj3(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) =>
-        s"\"" + k + "\":" + (if (v < 0) "-1"
-          else String.format(java.util.Locale.ROOT, "%.3f", Double.box(v)))
-      }.mkString("{", ",", "}")
-    val errObj = errors.map { case (k, v) => s"\"$k\":\"$v\"" }
-      .mkString("{", ",", "}")
-    // distinct failed queries (a query failing both passes appears as
-    // p1:<name> and p2:<name> in `errors` but is one failure)
-    val nFailed = errors.keys.map(_.dropWhile(_ != ':').drop(1)).toSet.size
-    // failed queries contribute -1 marker times; exclude them from the
-    // headline total so a broken query can't LOWER the number
-    def total(m: Map[String, Double]): Double =
-      m.collect { case (_, v) if v >= 0 => v }.sum
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
-    val spreadSummary = String.format(java.util.Locale.ROOT,
-      "\"spread_p50\":%.3f,\"spread_max\":%.3f", Double.box(spreadP50),
-      Double.box(spreadMax))
-    val shared = s""""value_cold":${total(cold)},"steady":${obj3(steady)},""" +
-      s"""$spreadSummary,"errors":$errObj,"n_failed":$nFailed,"sf":"$sfDir""""
-    val json = s"""{"metric":"total","value":${total(minQ)},"unit":"sec",""" +
-      s""""headline":"min over 2 disclosed full passes; cold pass total in value_cold, both passes + spread map in $out",""" +
-      s""""queries":${obj3(minQ)},$shared}"""
-    val jsonFull = s"""{"metric":"total","value":${total(minQ)},"unit":"sec",""" +
-      s""""headline":"min over 2 disclosed full passes; queries_cold/queries_warm are the raw passes; spread = per-query max/min across passes",""" +
-      s""""queries":${obj(minQ)},"queries_cold":${obj(cold)},""" +
-      s""""queries_warm":${obj(warm)},"spread":${obj3(spread)},$shared}"""
-    println(json)
-    // The driver's capture keeps only the last 2000 chars of the run
-    // log BEFORE parsing — every BENCH_r*.json through r11 records
-    // parsed:null because the last stdout line carried a per-query map
-    // that pushed it past the clamp (r10's 1300-char "budget" version
-    // still clamped: 162 queries' worth of entries plus sbt's trailing
-    // "[success] Total time..." line exceeded 2000). Emit a LAST line
-    // with NO maps at all — headline scalars only, well under 200
-    // chars; the full per-query maps, spread, and error text live in
-    // the file report ($out), where size is unbounded.
-    // r22 (VERDICT r21 "Next round" #3, additions-only): the full
-    // per-query line above has exceeded the driver's ~2 KB tail
-    // capture since the registry passed ~90 queries, which left
-    // PERF_r*.json with per_query:{} for two rounds. Re-emit the same
-    // min map as CHUNKED standalone JSON lines (each ≤ ~1.5 KB, each
-    // independently parseable, slowest queries LAST so the entries
-    // most worth auditing sit inside any bounded tail), then one
-    // short slowest-20 line. No timing or env changes; the final
-    // compact line stays the last line, unchanged.
-    val asc = minQ.toSeq.sortBy { case (_, v) => if (v < 0) Double.MaxValue else v }
-    def entry(kv: (String, Double)): String =
-      s"\"" + kv._1 + "\":" + (if (kv._2 < 0) "-1"
-        else String.format(java.util.Locale.ROOT, "%.3f", Double.box(kv._2)))
-    val chunks = scala.collection.mutable.ArrayBuffer[Seq[(String, Double)]]()
-    var cur = scala.collection.mutable.ArrayBuffer[(String, Double)]()
-    var curLen = 0
-    asc.foreach { kv =>
-      val l = entry(kv).length + 1
-      if (curLen + l > 1400 && cur.nonEmpty) {
-        chunks += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer(); curLen = 0
-      }
-      cur += kv; curLen += l
-    }
-    if (cur.nonEmpty) chunks += cur.toSeq
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      println(s"""{"metric":"queries_part","i":${i + 1},"of":${chunks.size},""" +
-        s""""queries":${c.map(entry).mkString("{", ",", "}")}}""")
-    }
-    println(s"""{"metric":"slowest","queries":${
-      asc.takeRight(20).reverse.map(entry).mkString("{", ",", "}")}}""")
-    val compact = s"""{"metric":"total","value":${total(minQ)},"unit":"sec",""" +
-      s""""n_queries":${minQ.size},"value_cold":${total(cold)},""" +
-      s""""n_failed":$nFailed,"sf":"$sfDir"}"""
-    println(compact)
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get(out),
-        jsonFull.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable => System.err.println(s"[bench] file write failed: $e") }
-    Memo.clear(spark)
-    spark.stop()
-    if (errors.nonEmpty) sys.exit(1)
+    /** The last stdout line: headline scalars only. */
+    def summary: ListMap[String, Any] = ListMap(
+      "metric" -> "total", "value" -> total(best), "unit" -> "sec",
+      "n_queries" -> best.size, "value_cold" -> total(cold),
+      "n_failed" -> errors.keys.map(_.dropWhile(_ != ':').drop(1)).toSet.size,
+      "sf" -> sf)
+
+    /** The file report: the summary, both passes, the minimum and the
+      * errors. */
+    def report: ListMap[String, Any] = summary ++ ListMap(
+      "queries" -> best, "queries_cold" -> cold, "queries_warm" -> warm, "errors" -> errors)
+
+    // a failed query's -1 never counts
+    private def total(m: Map[String, Double]): Double = m.values.filter(_ >= 0).sum
+  }
+
+  /** `{"metric":"queries","queries":{…}}`: the slowest entries of
+    * `best`, slowest first at 3 decimals, as many as fit in
+    * [[QueriesLineMax]] bytes. */
+  def queriesLine(best: Map[String, Double]): String = {
+    val slowest = best.toSeq.sortBy { case (k, v) => (-v, k) }
+      .map { case (k, v) => k -> (if (v < 0) -1 else Harness.round(v, 3)) }
+    slowest.inits
+      .map(kv => Harness.json(ListMap("metric" -> "queries", "queries" -> ListMap(kv: _*))))
+      .find(_.getBytes(UTF_8).length <= QueriesLineMax).get
   }
 }

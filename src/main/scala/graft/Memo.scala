@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, LinkOption, Path, Paths}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.graftbridge.Bridge
@@ -37,12 +37,13 @@ import org.apache.spark.storage.StorageLevel
   *    rebuilds into a new one. Each build writes one stderr line with
   *    its tag and seconds (stderr: Bench's stdout is parsed).
   *  - '''Clear''': [[clear]] drops every entry of a session: it
-  *    unpersists the frames, and deletes the directories together with
-  *    any catalog table stored under them. A dropped entry rebuilds
-  *    from lineage on its next use (the D-Streams recovery argument):
-  *    a build is a deterministic function of its inputs, so clearing
-  *    costs time and never changes a result. Every main clears its
-  *    session before it stops it.
+  *    unpersists the frames no other session's entry shares, and
+  *    deletes the directories together with any catalog table stored
+  *    under them. A dropped entry rebuilds from lineage on its next use
+  *    (the D-Streams recovery argument): a build is a deterministic
+  *    function of its inputs, so clearing costs time and never changes
+  *    a result. [[Harness.session]] clears every main's session before
+  *    it stops it.
   *
   * There is no byte budget and no eviction policy here: Spark's
   * MemoryStore already evicts cached blocks least-recently-used first
@@ -56,8 +57,9 @@ object Memo {
 
   private final class Entry(val session: String, val tag: String,
       val inputs: Seq[LogicalPlan]) {
-    // both guarded by this entry's lock
-    var result: Option[Any] = None
+    // both written under this entry's lock; `result` is also read
+    // without it when another session's entry is freed
+    @volatile var result: Option[Any] = None
     var dropped = false
 
     def matches(s: String, t: String, in: Seq[LogicalPlan]): Boolean =
@@ -144,20 +146,35 @@ object Memo {
     case _ => true
   }
 
-  /** Release what one entry result holds: unpersist a frame; drop the
-    * catalog tables stored under a directory, then delete it. */
+  /** Release what one entry result holds: unpersist a frame unless a
+    * live entry holds a frame with the same result (Spark's cache
+    * manager is shared by every session, so both read one cached
+    * relation); drop the catalog tables stored under a directory, then
+    * delete it. */
   private def free(spark: SparkSession)(result: Any): Unit = result match {
-    case df: Dataset[_] => df.unpersist(blocking = false)
+    case df: Dataset[_] =>
+      val plan = df.queryExecution.normalized
+      val shared = synchronized(live).exists(_.result.exists {
+        case o: Dataset[_] => o.queryExecution.normalized.sameResult(plan)
+        case _ => false
+      })
+      if (!shared) df.unpersist(blocking = false)
     case Dir(p) =>
       Bridge.tablesUnder(spark, p).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      val root = Paths.get(p)
-      if (Files.exists(root)) {
-        val w = Files.walk(root)
-        try w.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach { f => Files.deleteIfExists(f); () }
-        finally w.close()
-      }
+      deleteTree(p)
     case _ =>
+  }
+
+  /** Deletes the file or directory tree at `path`, if there is one;
+    * symbolic links are deleted, never followed. */
+  def deleteTree(path: String): Unit = {
+    val root = Paths.get(path)
+    if (Files.exists(root, LinkOption.NOFOLLOW_LINKS)) {
+      val w = Files.walk(root)
+      try w.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach { f => Files.deleteIfExists(f); () }
+      finally w.close()
+    }
   }
 
   /** Drop every entry of `spark`'s session: unpersist its frames and

@@ -1,39 +1,35 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.immutable.ListMap
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Generated-scale soak (VERDICT r10/r11 task #3): measure how the
-  * heavy query families actually scale, instead of arguing from plan
-  * shape alone.
+/** Generated-scale soak: measures how the heavy query families scale
+  * with corpus volume. `Soak [base] [work] [scales] [queries]`, with
+  * defaults sf0.1, `/tmp/graft_soak`, `1,8,64` and [[SoakQueries]].
   *
-  * Method: the sf0.1 corpus is replicated k× with per-replica
-  * perturbations chosen so the STATISTICAL shape scales the way a
-  * bigger real corpus would —
-  *  - documents: replica i's tokens carry an `_ri` suffix → each
-  *    replica reproduces the base token/df profile over a DISJOINT
-  *    vocabulary, so shingle postings grow linearly and no artificial
-  *    cross-replica duplicate pairs appear (naive copying would add
-  *    k² near-dup pairs per document and measure a problem that
-  *    doesn't exist);
-  *  - embeddings: replica i shifts every component by i·0.001 —
-  *    distinct vectors, same geometry class;
-  *  - events: replica i offsets event_id (log position) and user_id
-  *    (key space grows with volume, per-key history length constant —
-  *    how a real feed grows).
+  * The base corpus is replicated k× ([[ensureScaled]]) with
+  * per-replica perturbations chosen so the statistical shape scales
+  * the way a bigger real corpus would:
+  *  - documents: replica i's tokens carry an `_ri` suffix, so each
+  *    replica reproduces the base token/df profile over a disjoint
+  *    vocabulary; shingle postings grow linearly and no artificial
+  *    cross-replica duplicate pairs appear (plain copies would add k²
+  *    near-duplicate pairs per document);
+  *  - embeddings: replica i shifts every component by i·0.001;
+  *  - events: replica i offsets event_id and user_id, so the key space
+  *    grows with volume and per-key history length stays constant;
+  *  - TPC-H: the facts (orders, lineitem) are replicated with their
+  *    join key offset together, the dimensions copied verbatim.
   *
-  * Each (query, scale) runs twice in one session: pass 1 carries
-  * one-time costs (codegen, session-memoized relations, IVF build),
-  * pass 2 is the steady-state marginal. Exponents are reported for
-  * both — α = log(t_b/t_a)/log(k_b/k_a) between consecutive scales —
-  * because for memoized families (dedup clusters, IVF base index,
-  * tokenizedDocs) the COLD pass is the honest scaling figure while
-  * the warm pass shows the service steady state.
-  *
-  * Results land in SCALE.md (committed) + a JSON report. Scales
-  * default to 1/8/64 ⇒ the top point is a ~sf6.4-equivalent corpus
-  * (320k docs / 128k vectors / 6.4M events) — inside the sf5–10 band
-  * the verdict asked for.
+  * Each (query, scale) is timed to its full result ([[Harness.time]])
+  * twice in one session: the cold pass carries one-time costs (code
+  * generation, session memo builds), the warm pass is the steady-state
+  * marginal. Both report the exponent α = log(t_b/t_a)/log(k_b/k_a)
+  * between consecutive scales; for memoized families the cold pass is
+  * the scaling figure. The JSON report goes to `SPARK_GRAFT_SOAK_OUT`
+  * (default `SOAK_LOCAL.json`); committed captures are indexed in
+  * SCALE.md.
   */
 object Soak {
   private val SoakQueries = Seq(
@@ -57,69 +53,35 @@ object Soak {
     val work = if (args.length > 1) args(1) else "/tmp/graft_soak"
     val scales = if (args.length > 2) args(2).split(",").map(_.toInt).toSeq
       else Seq(1, 8, 64)
-    // optional 4th arg: restrict to these queries (deep-scale runs)
-    val queries = if (args.length > 3) args(3).split(",").toSeq
-      else SoakQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // at deep scale points the 100 TB discipline applies on this box
-    // too: shuffle partitions must grow with the data so a partition
-    // stays memory-resident (SPARK_GRAFT_SHUFFLE overrides)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    scales.foreach(k => ensureScaled(spark, base, work, k))
-
-    val results = scala.collection.mutable.LinkedHashMap[
-      (String, Int), (Double, Double)]()
-    scales.foreach { k =>
-      val dir = dirFor(base, work, k)
-      queries.foreach { q =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          // materialize the FULL plan (all output columns): a plain
-          // count() lets Catalyst prune unreferenced Sort/Window
-          // operators, which would measure only the scan for
-          // sort_multi / win_running
-          SparkEntry.queries(q)(spark, dir).queryExecution.toRdd.count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val t1 = once(); val t2 = once()
-        results((q, k)) = (t1, t2)
+    val queries = Harness.select(if (args.length > 3) args(3).split(",").toSeq else SoakQueries)
+    Harness.session { spark =>
+      scales.foreach(k => ensureScaled(spark, base, work, k))
+      val results = (for (k <- scales; (q, fn) <- queries) yield {
+        val dir = dirFor(base, work, k)
+        val (t1, t2) = (Harness.time(fn(spark, dir)), Harness.time(fn(spark, dir)))
         println(f"[soak] $q%-28s x$k%-3d cold=$t1%8.2fs warm=$t2%8.2fs")
-      }
+        (q, k) -> (t1, t2)
+      }).toMap
+      val report = ListMap("scales" -> scales, "queries" -> ListMap(queries.map { case (q, _) =>
+        val pts = scales.map(k => k -> results((q, k)))
+        def times(sel: ((Double, Double)) => Double) = pts.map(p => Harness.round(sel(p._2), 3))
+        q -> ListMap("cold" -> times(_._1), "warm" -> times(_._2),
+          "alpha_cold" -> alphas(pts.map(p => p._1 -> p._2._1)),
+          "alpha_warm" -> alphas(pts.map(p => p._1 -> p._2._2)))
+      }: _*))
+      val out = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "SOAK_LOCAL.json")
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(out), Harness.json(report))
+      println(s"[soak] report -> $out")
+      true
     }
-
-    // per-query exponents between consecutive scale points
-    val sb = new StringBuilder
-    sb.append("{\"scales\":[").append(scales.mkString(",")).append("],\"queries\":{")
-    sb.append(queries.map { q =>
-      val pts = scales.map(k => (k, results((q, k))))
-      def alphas(sel: ((Double, Double)) => Double) =
-        // filter: a single-scale run has no interval (sliding(2)
-        // yields one short window) — report empty alphas, don't crash
-        pts.sliding(2).filter(_.size == 2).map {
-          case Seq((ka, ta), (kb, tb)) =>
-            math.log(sel(tb) / sel(ta)) / math.log(kb.toDouble / ka)
-        }.toSeq
-      val aCold = alphas(_._1); val aWarm = alphas(_._2)
-      s""""$q":{"cold":[${pts.map(p => f"${p._2._1}%.3f").mkString(",")}],""" +
-        s""""warm":[${pts.map(p => f"${p._2._2}%.3f").mkString(",")}],""" +
-        s""""alpha_cold":[${aCold.map(a => f"$a%.2f").mkString(",")}],""" +
-        s""""alpha_warm":[${aWarm.map(a => f"$a%.2f").mkString(",")}]}"""
-    }.mkString(","))
-    sb.append("}}")
-    val out = sys.env.getOrElse("SPARK_GRAFT_SOAK_OUT", "SOAK_LOCAL.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[soak] report -> $out")
-    Memo.clear(spark)
-    spark.stop()
   }
+
+  /** The scaling exponent between each two consecutive (scale, value)
+    * points, at 2 decimals; empty for a single point. */
+  private[graft] def alphas(pts: Seq[(Int, Double)]): Seq[Any] =
+    pts.zip(pts.drop(1)).map { case ((ka, a), (kb, b)) =>
+      Harness.round(math.log(b / a) / math.log(kb.toDouble / ka), 2)
+    }
 
   private[graft] def dirFor(base: String, work: String, k: Int): String =
     if (k == 1) base else s"$work/x$k"

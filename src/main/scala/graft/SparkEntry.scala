@@ -49,23 +49,7 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     all.flatMap(o => o.oracle.map(sql => o.key -> sql)).toMap
 
-  /** `oracleSql` rendered as the JSON document the driver's json.load
-    * consumes — single shared implementation so Verify and Dev can
-    * never drift. Escapes backslash, quote and ALL control chars
-    * (<0x20): a tab or CR in builder-authored SQL would otherwise make
-    * the driver's parse fail and silently zero the round's
-    * correctness.
-    */
-  def oracleSqlJson: String = {
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    oracleSql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-  }
+  /** `oracleSql` as the JSON document the driver's json.load reads;
+    * Verify and Dev write it beside their dumps. */
+  def oracleSqlJson: String = Harness.json(oracleSql)
 }

@@ -1,36 +1,41 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Driver-run correctness dump: `Verify <sfDir> <outDir> [name ...]`
+  * writes each registered query's result (or only the named ones) to
+  * `<outDir>/<name>` as parquet, plus `oracle_sql.json`, for the
+  * DuckDB compare of `tools/verify_local.py`. A query that fails is
+  * reported on stderr and skipped; the exit code stays 0. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
-    // optional extra args: restrict the dump to these query names
-    // (local iteration aid; the driver passes exactly two args)
-    val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val queries = Harness.select(args.toSeq.drop(2))
+    Harness.session { spark => dump(spark, args(0), args(1), queries)(); true }
+  }
+
+  /** Runs each of `queries` on `sfDir`, hands its frame to `inspect`,
+    * then writes it to `<outDir>/<name>` as one parquet file; writes
+    * `oracle_sql.json` last. Returns the number of queries that
+    * failed, each reported on stderr with its stack trace. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, Harness.Query)])(
+      inspect: (String, DataFrame) => Unit = (_, _) => ()): Int = {
+    Files.createDirectories(Paths.get(outDir))
+    val failed = queries.count { case (name, fn) =>
+      try {
+        val df = fn(spark, sfDir)
+        inspect(name, df)
+        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        false
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[verify] $name failed: $e")
+          e.printStackTrace()
+          true
       }
     }
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      SparkEntry.oracleSqlJson)
-    Memo.clear(spark)
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), SparkEntry.oracleSqlJson)
+    failed
   }
 }

@@ -397,8 +397,8 @@ object AsOfJoin {
   }
 }
 
-/** SparkSessionExtensions entry point:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+/** SparkSessionExtensions entry point: a session builder's
+  * `withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.plans.GraftExtensions`. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {

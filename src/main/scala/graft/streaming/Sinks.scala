@@ -208,14 +208,8 @@ class ParquetStagedSink(root: String) extends StagedSink {
     ()
   }
 
-  override def abortStaged(batchId: Long): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    val s = stagingDir(batchId)
-    if (s.exists()) rm(s)
-  }
+  override def abortStaged(batchId: Long): Unit =
+    graft.Memo.deleteTree(stagingDir(batchId).getPath)
 
   override def visibleBatches: Seq[Long] = {
     val d = new java.io.File(s"$root/committed")

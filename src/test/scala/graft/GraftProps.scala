@@ -132,18 +132,26 @@ object GraftProps extends Properties("graft") {
       val s = spark
       import s.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft_jdbc_prop").toString
-      System.setProperty("derby.stream.error.file", s"$dir/derby.log")
-      val url = s"jdbc:derby:$dir/db;create=true"
-      val sink = new graft.streaming.JdbcUpsertSink(url, "T_PROP", Seq("id"))
-      List(0, 1, 0, 2, 1).foreach(i => sink.write(batches(i).toDF("id", "v"), i.toLong))
-      val p = new java.util.Properties()
-      p.put("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      val got = spark.read.jdbc(url, "T_PROP", p).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val want = batches.foldLeft(Map.empty[Long, Int]) { (m, b) =>
-        m ++ b.groupBy(_._1).map { case (k, rows) => k -> rows.map(_._2).max }
+      try {
+        System.setProperty("derby.stream.error.file", s"$dir/derby.log")
+        val url = s"jdbc:derby:$dir/db;create=true"
+        val sink = new graft.streaming.JdbcUpsertSink(url, "T_PROP", Seq("id"))
+        List(0, 1, 0, 2, 1).foreach(i => sink.write(batches(i).toDF("id", "v"), i.toLong))
+        val p = new java.util.Properties()
+        p.put("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+        val got = spark.read.jdbc(url, "T_PROP", p).collect()
+          .map(r => r.getLong(0) -> r.getInt(1)).toMap
+        val want = batches.foldLeft(Map.empty[Long, Int]) { (m, b) =>
+          m ++ b.groupBy(_._1).map { case (k, rows) => k -> rows.map(_._2).max }
+        }
+        got == want
+      } finally {
+        // shut the embedded database down before its files go; Derby
+        // reports a clean shutdown as an SQLException
+        try java.sql.DriverManager.getConnection(s"jdbc:derby:$dir/db;shutdown=true").close()
+        catch { case _: java.sql.SQLException => () }
+        Memo.deleteTree(dir)
       }
-      got == want
     }
   }
 
@@ -163,36 +171,38 @@ object GraftProps extends Properties("graft") {
       val s = spark
       import s.implicits._
       val dir = java.nio.file.Files.createTempDirectory("graft_2pc_prop").toString
-      val a = new ParquetStagedSink(s"$dir/a")
-      val b = new ParquetStagedSink(s"$dir/b")
-      val coord = new TwoPhaseFanOut(s"$dir/log", Seq(a, b))
-      val batch = Seq((1L, "x"), (2L, "y")).toDF("id", "payload")
-      val bid = 0L
-      def invariant(): Boolean =
-        if (!coord.committed(bid))
-          a.visibleBatches.isEmpty && b.visibleBatches.isEmpty
-        else
-          coord.readCommitted(s, a, bid).exists(_.count() == 2L) &&
-            coord.readCommitted(s, b, bid).exists(_.count() == 2L)
-      val ok = steps.forall { step =>
-        step match {
-          case "crash_staged" => if (!coord.committed(bid)) coord.stageAll(batch, bid)
-          case "crash_decided" =>
-            if (!coord.committed(bid)) { coord.stageAll(batch, bid); coord.decide(bid) }
-          case "crash_mid" =>
-            if (!coord.committed(bid)) { coord.stageAll(batch, bid); coord.decide(bid) }
-            a.commitStaged(bid)
-          case "complete" => coord.fanOut(batch, bid)
-          case "recover_redeliver" =>
-            coord.recover(Seq(bid)); coord.fanOut(batch, bid)
+      try {
+        val a = new ParquetStagedSink(s"$dir/a")
+        val b = new ParquetStagedSink(s"$dir/b")
+        val coord = new TwoPhaseFanOut(s"$dir/log", Seq(a, b))
+        val batch = Seq((1L, "x"), (2L, "y")).toDF("id", "payload")
+        val bid = 0L
+        def invariant(): Boolean =
+          if (!coord.committed(bid))
+            a.visibleBatches.isEmpty && b.visibleBatches.isEmpty
+          else
+            coord.readCommitted(s, a, bid).exists(_.count() == 2L) &&
+              coord.readCommitted(s, b, bid).exists(_.count() == 2L)
+        val ok = steps.forall { step =>
+          step match {
+            case "crash_staged" => if (!coord.committed(bid)) coord.stageAll(batch, bid)
+            case "crash_decided" =>
+              if (!coord.committed(bid)) { coord.stageAll(batch, bid); coord.decide(bid) }
+            case "crash_mid" =>
+              if (!coord.committed(bid)) { coord.stageAll(batch, bid); coord.decide(bid) }
+              a.commitStaged(bid)
+            case "complete" => coord.fanOut(batch, bid)
+            case "recover_redeliver" =>
+              coord.recover(Seq(bid)); coord.fanOut(batch, bid)
+          }
+          invariant()
         }
-        invariant()
-      }
-      // final clean redelivery: both DIRECT views converge whole
-      coord.fanOut(batch, bid)
-      ok && a.visibleBatches == Seq(bid) && b.visibleBatches == Seq(bid) &&
-        s.read.parquet(s"$dir/a/committed/batch_0").count() == 2L &&
-        s.read.parquet(s"$dir/b/committed/batch_0").count() == 2L
+        // final clean redelivery: both DIRECT views converge whole
+        coord.fanOut(batch, bid)
+        ok && a.visibleBatches == Seq(bid) && b.visibleBatches == Seq(bid) &&
+          s.read.parquet(s"$dir/a/committed/batch_0").count() == 2L &&
+          s.read.parquet(s"$dir/b/committed/batch_0").count() == 2L
+      } finally Memo.deleteTree(dir)
     }
   }
 

@@ -44,12 +44,6 @@ class MemoSpec extends SparkSpec {
   private def graftTemp: Set[java.io.File] =
     tmp.listFiles().filter(_.getName.startsWith("graft_")).toSet
 
-  private def deleteTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteTree))
-    f.delete()
-    ()
-  }
-
   test("memo keys on its input frames: different docs each get their own pairs") {
     val s = spark.newSession()
     import s.implicits._
@@ -146,7 +140,7 @@ class MemoSpec extends SparkSpec {
     try {
       val d1 = fixture()
       assert(fixture() == d1 && writes.get == 1)
-      deleteTree(new java.io.File(d1))
+      Memo.deleteTree(d1)
       val d2 = fixture()
       assert(writes.get == 2 && d2 != d1)
       assert(s.read.parquet(d2).count() == 10)
@@ -156,7 +150,7 @@ class MemoSpec extends SparkSpec {
       val first = rowsOf(q(s, sf001))
       val made = graftTemp -- before
       assert(made.size == 1, made)
-      made.foreach(deleteTree)
+      made.foreach(f => Memo.deleteTree(f.getPath))
       assert(rowsOf(q(s, sf001)) == first)
       val remade = graftTemp -- before
       assert(remade.size == 1 && remade != made, remade)
@@ -214,20 +208,49 @@ class MemoSpec extends SparkSpec {
     assert(fixtures.subsetOf(memoized.collect { case (q, true) => q }.toSet), memoized)
   }
 
-  test("src/main hand-rolls no session memo: no interned locks, key sets, fixture roots or session ids") {
+  test("Memo.clear on one session keeps another session's frame over the same plan cached") {
+    // Spark's cache manager is shared by every session: both entries
+    // read one cached relation, so clearing one must not unpersist it
+    val (s1, s2) = (spark.newSession(), spark.newSession())
+    def probe(s: SparkSession): DataFrame = {
+      val in = s.range(1000).toDF("id")
+      Memo.frame("shared_probe", in)(in.selectExpr("id", "id * 7 % 13 AS k"))
+    }
+    try {
+      probe(s1)
+      val kept = probe(s2)
+      Memo.clear(s1)
+      assert(kept.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "clearing s1 unpersisted the relation s2's live entry reads")
+    } finally { Memo.clear(s1); Memo.clear(s2) }
+  }
+
+  /** Each `src/main` Scala line `banned(fileName, line)` flags, as
+    * `path:line: text`. */
+  private def srcMainHits(banned: (String, String) => Boolean): List[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
     assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
-    val anywhere = Seq("intern.synchronized", "newKeySet", "/tmp/graft_fixtures")
-    // the registry and the private[sql] shim own the session identity
-    def banned(file: String, line: String) = anywhere.exists(line.contains) ||
-      (line.contains("sessionUUID") && file != "Memo.scala" && file != "Bridge.scala")
     val w = java.nio.file.Files.walk(root)
-    val hits = try w.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+    try w.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
       java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
         case (l, i) if banned(p.getFileName.toString, l) => s"$p:${i + 1}: ${l.trim}"
       }
     }.toList finally w.close()
+  }
+
+  test("src/main hand-rolls no session memo: no interned locks, key sets, fixture roots or session ids") {
+    val anywhere = Seq("intern.synchronized", "newKeySet", "/tmp/graft_fixtures")
+    // the registry and the private[sql] shim own the session identity
+    val hits = srcMainHits((file, line) => anywhere.exists(line.contains) ||
+      (line.contains("sessionUUID") && file != "Memo.scala" && file != "Bridge.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main builds its sessions and reads SPARK_GRAFT_CPUS only in Harness, and chunks no queries_part") {
+    val hits = srcMainHits((file, line) => line.contains("queries_part") ||
+      (file != "Harness.scala" && (line.contains("SparkSession.builder") ||
+        line.contains("sys.env.getOrElse(\"SPARK_GRAFT_CPUS\""))))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -163,7 +163,7 @@ class SinkContractSpec extends SparkSpec {
   test("avro wire publisher: decode∘publish ≡ the batch; idempotent per batchId") {
     import graft.ops.AvroWire
     import graft.streaming.AvroWireSink
-    val dir = java.nio.file.Files.createTempDirectory("graft_wiresink").toString
+    val dir = tmpDir("graft_wiresink")
     val sink = new AvroWireSink(s"$dir/wire")
     val env = AvroWire.flatEnvelope(Tables.events(spark, sf001))
     val src = env.collect().sortBy(_.position).toSeq

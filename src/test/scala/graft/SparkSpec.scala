@@ -26,14 +26,22 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** bench-scale corpus — used sparingly (candidate-volume audits) */
   val sf1 = "/root/testdata/sf0.1"
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
-  /** Drop the memo entries this suite made in the shared session: its
-    * cached frames, fixture dirs and their catalog tables. Spark's
-    * cache manager is shared across sessions, so a frame left cached
-    * here would turn a later suite's persist of the same plan into a
-    * no-op. */
+  /** A fresh directory under the system temp dir, deleted after the
+    * suite. */
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toString
+    tmpDirs.add(d)
+    d
+  }
+
+  /** Drop the memo entries this suite made in the shared session (its
+    * cached frames, fixture dirs and their catalog tables), then delete
+    * its [[tmpDir]]s. Spark's cache manager is shared across sessions,
+    * so a frame left cached here would turn a later suite's persist of
+    * the same plan into a no-op. */
   override def afterAll(): Unit =
-    try Memo.clear(spark) finally super.afterAll()
+    try Memo.clear(spark)
+    finally try tmpDirs.forEach(d => Memo.deleteTree(d)) finally super.afterAll()
 }
