@@ -52,8 +52,7 @@ object Bench {
     * start-up cost does not land on whichever query runs first. */
   private def warmUp(spark: SparkSession, sfDir: String): Unit =
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count().collect()
-      graft.functions.VectorKernels.register(spark)
+      Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count().collect()
       spark.range(1).selectExpr(
         "graft_simhash_text(array('a','b')) AS a",
         "graft_minhash(array('a','b'), 16) AS b",

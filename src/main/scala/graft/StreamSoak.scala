@@ -81,8 +81,7 @@ object StreamSoak {
         * schema-probe + ts-normalization, plus a files-per-trigger cap
         * so the run spans several micro-batches. */
       def eventStream(dir: String, maxFiles: Option[Int]): DataFrame = {
-        Tables.configure(spark)
-        val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+        val fileSchema = Tables.load(spark, dir, "events").schema
         val rd = spark.readStream.schema(fileSchema)
         val capped = maxFiles.fold(rd)(n => rd.option("maxFilesPerTrigger", n))
         Tables.normalizeEventTs(capped.parquet(s"$dir/events.parque[t]"))

@@ -1,5 +1,7 @@
 package graft
 
+import graft.functions.VectorKernels
+import graft.plans.{AsOfJoin, ToleranceJoinRule}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,20 +12,36 @@ import org.apache.spark.sql.functions._
   *  - All reads are plain `spark.read.parquet` so Catalyst's column
   *    pruning / predicate pushdown reach the scan untouched; no
   *    driver-side materialization ever happens here.
-  *  - Session tuning (AQE, UTC, shuffle partitions) is applied
-  *    idempotently on every load because the driver's Verify/Bench
-  *    mains build their own sessions without these flags
-  *    (SURVEY.md §7 "hard parts").
+  *  - Every load runs [[configure]], the one place graft installs
+  *    itself into a session: sessions built elsewhere (the driver's
+  *    Verify/Bench, perfbench, `Harness`) lack graft's confs, SQL
+  *    functions and planner rules, so a query has them once its first
+  *    table is loaded and the ops install nothing themselves. Code
+  *    running graft functions over frames not loaded here (a test
+  *    calling a helper on `createDataFrame` input) calls [[configure]]
+  *    once first.
   */
 object Tables {
 
-  /** Idempotent session posture. Runtime-settable confs only. */
+  /** Installs graft into `spark`; idempotent, and cheap enough to run
+    * on every load: the runtime confs (UTC session zone, parquet
+    * timestamp[ns] read as long nanos, AQE), every graft SQL function
+    * the session lacks ([[graft.functions.VectorKernels.register]]),
+    * and the as-of planner strategy and tolerance-join optimizer rule
+    * when absent. */
   def configure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     // events.ts is parquet timestamp[ns]; Spark has no ns timestamp.
     // Read as long nanos and convert explicitly (FIXTURES.md).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    // one lock: concurrent first loads would otherwise both see a rule
+    // or function absent and add it twice
+    synchronized {
+      VectorKernels.register(spark)
+      AsOfJoin.register(spark)
+      ToleranceJoinRule.register(spark)
+    }
   }
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {

@@ -1,10 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -19,7 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Algorithm: FNV-1a 64-bit over UTF-8 bytes, with the seed folded
   * into the offset basis via a golden-ratio multiply so different
-  * seeds realize effectively independent hash functions.
+  * seeds realize effectively independent hash functions. SQL form
+  * `graft_seeded_hash(str, seed)`, registered with the other kernels
+  * by [[VectorKernels.register]].
   */
 case class SeededFnvHash(child: Expression, seed: Long)
     extends UnaryExpression {
@@ -58,24 +58,5 @@ object SeededFnvHash {
       i += 1
     }
     h
-  }
-
-  /** Idempotent SQL registration: graft_seeded_hash(str, seed). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_seeded_hash",
-      exprs => SeededFnvHash(exprs.head, exprs(1) match {
-        case Literal(v: Long, _) => v
-        case Literal(v: Int, _) => v.toLong
-        case other => throw new IllegalArgumentException(
-          s"graft_seeded_hash seed must be a literal integer, got $other")
-      }),
-      "built-in")
-
-  /** Column-API form (registers on the column's active session at
-    * resolution time via call_function). */
-  def seededHash(spark: SparkSession, c: Column, seed: Long): Column = {
-    register(spark)
-    call_function("graft_seeded_hash", c, lit(seed))
   }
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
@@ -992,91 +992,38 @@ object VectorKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
   }
 
-  /** Idempotent SQL registration of all graft kernels. */
+  /** Registers each graft SQL function the session's registry does not
+    * already hold; one present is left as it is, so a repeated call
+    * replaces nothing. Sessions get the functions through
+    * [[graft.Tables.configure]], which states the install contract. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_tokens",
-      exprs => CjkTokens(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_winnow_fps",
-      exprs => WinnowFps(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_winnow_fps k must be a literal integer, got $other")
-      }, exprs(2) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_winnow_fps w must be a literal integer, got $other")
-      }), "built-in")
-    reg.createOrReplaceTempFunction("graft_window_hashes",
-      exprs => WindowHashes(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_window_hashes w must be a literal integer, got $other")
-      }), "built-in")
-    reg.createOrReplaceTempFunction("graft_char_ngrams",
-      exprs => CharNgrams(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_char_ngrams n must be a literal integer, got $other")
-      }), "built-in")
-    reg.createOrReplaceTempFunction("graft_quant8",
-      exprs => Quant8(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => DoubleArrayDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash_text",
-      exprs => SimHashText(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      exprs => ShingleArray(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_shingles n must be a literal integer, got $other")
-      }), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles_sorted",
-      exprs => ShingleArraySorted(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_shingles_sorted n must be a literal integer, got $other")
-      }), "built-in")
-    def litInt(e: org.apache.spark.sql.catalyst.expressions.Expression,
-        what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-      case other => throw new IllegalArgumentException(
-        s"graft_rpbands $what must be a literal integer, got $other")
-    }
-    // the seed is a genuine Long — funneling it through litInt would
-    // silently truncate >32-bit seeds to the low word (ADVICE r2)
-    def litLong(e: org.apache.spark.sql.catalyst.expressions.Expression,
-        what: String): Long = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-      case other => throw new IllegalArgumentException(
-        s"graft_rpbands $what must be a literal integer, got $other")
-    }
-    reg.createOrReplaceTempFunction("graft_rpbands",
-      exprs => RandomProjBands(exprs(0), litInt(exprs(1), "r"),
-        litInt(exprs(2), "bands"), litLong(exprs(3), "seed")), "built-in")
-    reg.createOrReplaceTempFunction("graft_best_centroid",
-      exprs => BestCentroid(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_best_centroid_l2",
-      exprs => BestCentroidL2(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cos_centroids",
-      exprs => CosCentroids(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash",
-      exprs => MinHashArray(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash k must be a literal integer, got $other")
-      }), "built-in")
-    SeededFnvHash.register(spark)
+    // `arg(i, what)`: argument i as a literal integer, widened to Long
+    // so the rpbands seed keeps its high word
+    def fn(name: String)(build: (Seq[Expression], (Int, String) => Long) => Expression): Unit =
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, exprs => build(exprs, (i, what) => exprs(i) match {
+          case Literal(v: Int, _) => v.toLong
+          case Literal(v: Long, _) => v
+          case other => throw new IllegalArgumentException(
+            s"$name $what must be a literal integer, got $other")
+        }), "built-in")
+    fn("graft_tokens")((e, _) => CjkTokens(e.head))
+    fn("graft_winnow_fps")((e, arg) => WinnowFps(e(0), arg(1, "k").toInt, arg(2, "w").toInt))
+    fn("graft_window_hashes")((e, arg) => WindowHashes(e(0), arg(1, "w").toInt))
+    fn("graft_char_ngrams")((e, arg) => CharNgrams(e(0), arg(1, "n").toInt))
+    fn("graft_quant8")((e, _) => Quant8(e.head))
+    fn("graft_dot")((e, _) => DoubleArrayDot(e(0), e(1)))
+    fn("graft_simhash64")((e, _) => SimHash64(e.head))
+    fn("graft_simhash_text")((e, _) => SimHashText(e.head))
+    fn("graft_shingles")((e, arg) => ShingleArray(e(0), arg(1, "n").toInt))
+    fn("graft_shingles_sorted")((e, arg) => ShingleArraySorted(e(0), arg(1, "n").toInt))
+    fn("graft_rpbands")((e, arg) => RandomProjBands(e(0), arg(1, "r").toInt,
+      arg(2, "bands").toInt, arg(3, "seed")))
+    fn("graft_best_centroid")((e, _) => BestCentroid(e(0), e(1)))
+    fn("graft_best_centroid_l2")((e, _) => BestCentroidL2(e(0), e(1)))
+    fn("graft_cos_centroids")((e, _) => CosCentroids(e(0), e(1)))
+    fn("graft_minhash")((e, arg) => MinHashArray(e(0), arg(1, "k").toInt))
+    fn("graft_seeded_hash")((e, arg) => SeededFnvHash(e(0), arg(1, "seed")))
   }
 }

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.{Op, OpModule, Tables}
-import graft.functions.SeededFnvHash
 import org.apache.spark.sql.functions._
 
 /** UDF / UDTF surface (SURVEY.md §2.11): the custom scalar expression
@@ -18,7 +17,6 @@ object Extension extends OpModule {
     // in LlmSpec.
     Op("udf_expr_hash",
       (s, d) => {
-        SeededFnvHash.register(s)
         Tables.documents(s, d)
           .select(col("doc_id"),
             call_function("graft_seeded_hash", col("text"), lit(1L)).as("h_seed1"),

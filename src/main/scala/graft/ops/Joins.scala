@@ -366,7 +366,6 @@ object Joins extends OpModule {
       // this query plans NO product with the rule installed, and the
       // identical query on a bare session DOES plan the product.
       (s, d) => {
-        graft.plans.ToleranceJoinRule.register(s)
         val e = Tables.events(s, d).withColumn("ts_us", unix_micros(col("ts")))
         val clicks = e.filter(col("event_type") === "click")
           .select(col("event_id").as("click_id"), col("ts_us").as("c_us"))
@@ -407,7 +406,6 @@ object Joins extends OpModule {
       // DuckDB). PlanSpec pins no-product + Generate for this query
       // too, at the second operating point.
       (s, d) => {
-        graft.plans.ToleranceJoinRule.register(s)
         val o = Tables.orders(s, d).select(col("o_orderkey"),
           round(col("o_totalprice") * 100, 0).cast("long").as("cents"))
         val a = o.select(col("o_orderkey").as("key_a"),
@@ -447,7 +445,6 @@ object Joins extends OpModule {
       // machinery; the oracle runs the naive tolerance join plus the
       // ranked-window as-of rewrite.
       (s, d) => {
-        graft.plans.ToleranceJoinRule.register(s)
         val e = Tables.events(s, d)
           .withColumn("ts_us", unix_micros(col("ts")))
         val clicks = e.filter(col("event_type") === "click")

@@ -130,7 +130,6 @@ object LlmOps extends OpModule {
     // materialize the token array BEFORE any lambda references it: an
     // unbound expression inside a higher-order-function body re-evaluates
     // per array element (regexp+split × n_shingles — 10× slower at sf0.1)
-    graft.functions.VectorKernels.register(docs.sparkSession)
     val toked = docs.select(col("doc_id"), tokens(col("text")).as("toks"),
       normText(col("text")).as("norm"))
     val t = col("toks")
@@ -245,7 +244,6 @@ object LlmOps extends OpModule {
       s"simSearch is the brute-force reference scorer; $nProbes probes " +
         s"exceeds MaxBruteForceProbes=$MaxBruteForceProbes — use " +
         "simSearchLsh/simSearchIvf/simSearchIvfPq for probes at scale")
-    graft.functions.VectorKernels.register(emb.sparkSession)
     val probes = emb.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("p_id"), col("embedding").as("p_emb"))
     val scored = probes.crossJoin(emb)
@@ -330,7 +328,6 @@ object LlmOps extends OpModule {
   def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 16,
       s"maxHamming in [0,16] (table count is C(h+3,3)); got $maxHamming")
-    graft.functions.VectorKernels.register(docs.sparkSession)
     // fingerprint = one fused kernel (hash + votes + packing): the
     // composed HOF rendering interpreted 64 lambda evals per token and
     // allocated a vote array per step — 13s → ~1s at sf0.1
@@ -1147,7 +1144,6 @@ object LlmOps extends OpModule {
     * corpus — shared base of the novelty forms below. */
   private def noveltyPostings(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
-    graft.functions.VectorKernels.register(s)
     tokenizedDocs(s, d)
       .filter(size(col("toks")) >= 4)
       .select(col("doc_id"), explode(call_function(
@@ -1202,7 +1198,6 @@ object LlmOps extends OpModule {
     */
   def rpBandCandidates(emb: DataFrame, r: Int = 16, bands: Int = 24,
       seed: Long = 7L, dedup: Boolean = true): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     // NO signature materialization point here, deliberately (unlike
     // bandedMinhash): the hyperplane kernel is a few hundred flops per
     // vector — cheaper than the repartition a shared stage would cost.
@@ -1238,7 +1233,6 @@ object LlmOps extends OpModule {
     */
   def embedNearDupBanded(emb: DataFrame, tau: Double, r: Int = 16,
       bands: Int = 24, seed: Long = 7L): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .withColumn("n", sqrt(call_function("graft_dot", col("e"), col("e"))))
     // dedup AFTER the tau confirm, not between candidates and scoring
@@ -1263,7 +1257,6 @@ object LlmOps extends OpModule {
     * the banded path.
     */
   def embedNearDup(emb: DataFrame, tau: Double): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     // pre-cast to array<double> and precompute norms ONCE per vector
     // (not per pair); the pairwise hot loop is a single codegen'd dot
     def side(pfx: String) = emb
@@ -1323,7 +1316,6 @@ object LlmOps extends OpModule {
     */
   private def lmScores(s: org.apache.spark.sql.SparkSession,
       d: String): DataFrame = {
-    graft.functions.VectorKernels.register(s)
     val bi = tokenizedDocs(s, d)
       .select(col("doc_id"), explode(call_function("graft_shingles",
         col("toks"), lit(2))).as("bigram"))
@@ -1404,7 +1396,6 @@ object LlmOps extends OpModule {
   private[graft] def dsirSample(spark: org.apache.spark.sql.SparkSession,
       sfDir: String, isTarget: Column, m: Int = 1024,
       keep: Double = 0.25): DataFrame = {
-    graft.functions.VectorKernels.register(spark)
     val toks = tokenizedDocs(spark, sfDir)
     val feats = toks.select(col("doc_id"), col("lang"),
         explode(concat(col("toks"),
@@ -1462,7 +1453,6 @@ object LlmOps extends OpModule {
     * per the sizing law — the winnowing index a production MOSS-style
     * pipeline maintains per corpus snapshot. */
   private def winnowPostingsOf(docsIn: DataFrame): DataFrame = {
-    graft.functions.VectorKernels.register(docsIn.sparkSession)
     val docs = docsIn.filter(length(col("text")) >= 11)
     Scale.repartitionSized(Scale.sizedShuffle(docs),
       docs.select(col("doc_id"),
@@ -1640,7 +1630,6 @@ object LlmOps extends OpModule {
     */
   private[graft] def semDedup(emb: DataFrame, tau: Double,
       maxClusterSize: Int = 256): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     val n = emb.count()
     val c = math.max(8L, math.ceil(math.sqrt(n.toDouble)).toLong).toInt
     // centroids learn from a BOUNDED deterministic sample (≤ 64k
@@ -1729,7 +1718,6 @@ object LlmOps extends OpModule {
       iters: Int = 2, maxDepth: Int = 3): DataFrame = {
     val spark = assign.sparkSession
     import spark.implicits._
-    graft.functions.VectorKernels.register(spark)
     val target = math.max(2, maxClusterSize / 2)
     def refine(cur: DataFrame, depth: Int): DataFrame = {
       // O(C) rows on the driver — cluster-count scale
@@ -1923,7 +1911,6 @@ object LlmOps extends OpModule {
   def decontaminate(docs: DataFrame, n: Int = 8,
       maxTrainDf: Option[Long] = None,
       pretok: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VectorKernels.register(docs.sparkSession)
     // r12: split derives INLINE from the token array instead of
     // joining trainSplit(docs) back on doc_id — that was a corpus
     // self-join whose only payload was a CASE over md5, recomputable
@@ -1991,7 +1978,6 @@ object LlmOps extends OpModule {
     */
   def simSearchLsh(emb: DataFrame, nProbes: Int, topK: Int, r: Int = 5,
       bands: Int = 28, seed: Long = 7L): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     val banded = emb.select(col("vec_id"),
         posexplode(call_function("graft_rpbands",
           col("embedding").cast("array<double>"), lit(r), lit(bands), lit(seed))))
@@ -2066,7 +2052,6 @@ object LlmOps extends OpModule {
     */
   private def assignTo(emb: DataFrame, cids: Seq[Long],
       cents: Seq[Seq[Double]]): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .withColumn("best",
         call_function("graft_best_centroid", col("e"), typedLit(cents)))
@@ -2316,7 +2301,6 @@ object LlmOps extends OpModule {
     * join.
     */
   private[ops] def rankCentroids(probes: DataFrame, idx: IvfIdx): DataFrame = {
-    graft.functions.VectorKernels.register(probes.sparkSession)
     probes
       .withColumn("cs",
         call_function("graft_cos_centroids", col("p_emb"), typedLit(idx.cents)))
@@ -2355,7 +2339,6 @@ object LlmOps extends OpModule {
   def simSearchIvfExact(emb: DataFrame, nProbes: Int, topK: Int,
       nCentroids: Int = 8,
       excludeSameLabel: Boolean = false): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     val nProbe = math.max(1, nCentroids / 2)
     val idx = ivfIndex(emb, nCentroids)
     val assign = idx.assign
@@ -2423,7 +2406,6 @@ object LlmOps extends OpModule {
     */
   def simSearchIvf(emb: DataFrame, nProbes: Int, topK: Int,
       nCentroids: Int = 8, nProbe: Int = 3): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     val idx = ivfIndex(emb, nCentroids)
     val probes = emb.filter(col("vec_id") < nProbes)
       .select(col("vec_id").as("p_id"), col("embedding").cast("array<double>").as("p_emb"))
@@ -2436,7 +2418,6 @@ object LlmOps extends OpModule {
     * pruning, so the scan reads nProbe/C of the corpus. */
   private[graft] def simSearchIvfOn(idx: IvfIdx, probes: DataFrame,
       topK: Int, nProbe: Int): DataFrame = {
-    graft.functions.VectorKernels.register(probes.sparkSession)
     val probeBuckets = rankCentroids(probes, idx)
       .filter(col("c_rn") <= nProbe)
       .select(col("p_id"), col("p_emb"), col("cid"))
@@ -2475,7 +2456,6 @@ object LlmOps extends OpModule {
     * [[jaccardPairs]]).
     */
   private[graft] def shingleSets(docs: DataFrame, shingleN: Int): DataFrame = {
-    graft.functions.VectorKernels.register(docs.sparkSession)
     val toked = docs.select(col("doc_id"), tokens(col("text")).as("toks"),
       normText(col("text")).as("norm"))
     // the fused kernel ≡ array_sort(array_distinct(graft_shingles(…)))
@@ -2745,7 +2725,6 @@ object LlmOps extends OpModule {
     * dimension table.
     */
   def langId(docs: DataFrame, topK: Int = 200, trainMod: Int = 5): DataFrame = {
-    graft.functions.VectorKernels.register(docs.sparkSession)
     val base = docs.select(col("doc_id"), col("lang"),
       normText(col("text")).as("txt"))
     // trigrams via the fused kernel — the declarative transform+substr
@@ -2827,7 +2806,6 @@ object LlmOps extends OpModule {
       // LlmSpec. The registered query runs recall-demonstrably: corpus ∪
       // one-token-truncated clones must pair up with their originals.
       (s, d) => {
-        SeededFnvHash.register(s)
         val docs = Tables.documents(s, d).select("doc_id", "text")
         val toks = tokens(col("text"))
         // clone ids carry a disjoint high-bit tag (ADVICE r2): an
@@ -3434,7 +3412,6 @@ object LlmOps extends OpModule {
     // crafted fixtures + fingerprint locality pinned in LlmSpec
     Op("llm_dedup_simhash",
       (s, d) => {
-        SeededFnvHash.register(s)
         val docs = Tables.documents(s, d).select("doc_id", "text")
         val toks = tokens(col("text"))
         // high-bit clone tag — see llm_dedup_near
@@ -3663,10 +3640,7 @@ object LlmOps extends OpModule {
       // the two ≤|docs| relations. The shingle-grain join + its
       // sort are gone; LlmSpec pins new ≡ join-form row-for-row and
       // the unchanged oracle re-proves it under the hash gate.
-      (s, d) => {
-        graft.functions.VectorKernels.register(s)
-        ngramNovelty(s, d)
-      },
+      (s, d) => ngramNovelty(s, d),
       Some("""WITH tk AS (
                 SELECT doc_id, string_split(
                   lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')
@@ -3869,7 +3843,6 @@ object LlmOps extends OpModule {
       // background). Not oracleable (seeded hyperplanes); LlmSpec
       // pins precision 1.0 (only planted rows flag) and recall ≥ 0.9.
       (s, d) => {
-        graft.functions.VectorKernels.register(s)
         val ed = col("embedding").cast("array<double>")
         val base = Tables.embeddings(s, d).select(col("vec_id"), ed.as("e"))
           .withColumn("is_train",
@@ -4048,7 +4021,6 @@ object LlmOps extends OpModule {
       // is bounded by scale/2 by construction — the oracle recomputes
       // all three.
       (s, d) => {
-        graft.functions.VectorKernels.register(s)
         val e = col("embedding").cast("array<double>")
         Tables.embeddings(s, d)
           .select(col("vec_id"), call_function("graft_quant8", e).as("qz"), e.as("e"))
@@ -4447,7 +4419,6 @@ object LlmOps extends OpModule {
         // [] below n tokens so no size guard is needed. Tokens come
         // from the session-shared [[tokenizedDocs]] memo — one corpus
         // tokenize pass feeds the whole text-analysis family
-        graft.functions.VectorKernels.register(s)
         val exploded = tokenizedDocs(s, d)
           .select(col("lang"),
             explode(call_function("graft_shingles", col("toks"), lit(2)))
@@ -4758,7 +4729,6 @@ object LlmOps extends OpModule {
       // terms round at 10dp and re-accumulate through DECIMAL (acf
       // dsum rule), finish is one shared fixed IEEE sequence.
       (s, d) => {
-        graft.functions.VectorKernels.register(s)
         val cnt = tokenizedDocs(s, d)
           .select(explode(col("toks")).as("term"))
           .groupBy("term").agg(count(lit(1)).as("c"))
@@ -4798,7 +4768,6 @@ object LlmOps extends OpModule {
       // vocab-sized double sums are NOT under the 6dp round's
       // protection, unlike agg_entropy's ≤|langs| terms).
       (s, d) => {
-        graft.functions.VectorKernels.register(s)
         val cnt = tokenizedDocs(s, d)
           .select(col("lang"), explode(col("toks")).as("term"))
           .groupBy("lang", "term").agg(count(lit(1)).as("n"))
@@ -4856,7 +4825,6 @@ object LlmOps extends OpModule {
       // counts (map-side combined), never tokens; top-20 is
       // TakeOrdered, not a global sort.
       (s, d) => {
-        graft.functions.VectorKernels.register(s)
         val cnt = tokenizedDocs(s, d)
           .select(explode(call_function("graft_shingles",
             col("toks"), lit(2))).as("bigram"))
@@ -4927,7 +4895,6 @@ object LlmOps extends OpModule {
       // yields an empty shingle array, so explode drops it with no
       // separate filter.
       (s, d) => {
-        graft.functions.VectorKernels.register(s)
         val bi = tokenizedDocs(s, d)
           .select(explode(call_function("graft_shingles",
             col("toks"), lit(2))).as("bigram"))
@@ -5467,7 +5434,6 @@ object LlmOps extends OpModule {
       // agree on the SETS.
       (s, d) => {
         val docs = Tables.documents(s, d)
-        graft.functions.VectorKernels.register(s)
         docs.createOrReplaceTempView("graft_docs_winnow")
         s.sql("""
           SELECT doc_id, CAST(size(fps) AS BIGINT) AS n_fp,

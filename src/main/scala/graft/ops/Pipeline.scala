@@ -125,7 +125,6 @@ object PipelineOps extends OpModule {
     * parallel, which is the shape that survives 100 TB.)
     */
   def repetitionStats(docs: DataFrame): DataFrame = {
-    graft.functions.VectorKernels.register(docs.sparkSession)
     // materialize arrays BEFORE any lambda references them: HOF
     // lambdas re-evaluate unbound outer expressions per element
     val toked = docs
@@ -744,7 +743,6 @@ object PipelineOps extends OpModule {
     */
   def contentSignals(docs: DataFrame,
       passthrough: Seq[String] = Nil): DataFrame = {
-    graft.functions.VectorKernels.register(docs.sparkSession)
     val norm = normText(col("text"))
     val extra = passthrough.map(col)
     val toked = docs

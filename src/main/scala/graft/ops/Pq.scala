@@ -339,7 +339,6 @@ object PqOps extends OpModule {
     * projection, plus the reconstruction cosine error 1 − cos(e, ê)
     * that PqSpec bounds. */
   def pqEncode(emb: DataFrame, cb: PqCodebook): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     // `er` = the (possibly rotated) space the codebooks live in; the
     // output `e` column stays ORIGINAL for downstream exact rescoring
     val codes = array((0 until cb.m).map { i =>
@@ -393,7 +392,6 @@ object PqOps extends OpModule {
       nCentroids: Int = 8, nProbe: Int = 3, m: Int = 8, k: Int = 16,
       rerank: Int = 32, usePackedAdc: Boolean = true,
       rot: Option[Seq[Seq[Double]]] = None): DataFrame = {
-    graft.functions.VectorKernels.register(emb.sparkSession)
     val idx = LlmOps.ivfIndex(emb, nCentroids)
     val cb = pqTrain(emb, m, k, rot)
     val codeCol = if (usePackedAdc) "packed" else "codes"

@@ -79,16 +79,6 @@ object Scale {
     math.max(sessionDefault, want)
   }
 
-  /** `true` when [[sizedPartitions]] would exceed the session default —
-    * the callers' gate for swapping in explicit partition counts. Kept
-    * separate so call sites can keep the r13 plan (AQE-coalescible
-    * implicit exchanges) byte-for-byte when the law is a no-op.
-    */
-  def sizingEngaged(input: DataFrame,
-      bytesPerPartition: Long = 1L << 20): Boolean =
-    sizedPartitions(input, bytesPerPartition) >
-      input.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-
   /** The law as a value call sites can thread: `Some(n)` when the
     * pre-explode input's size estimate demands more partitions than
     * the session default, `None` otherwise. Evaluated ONCE per query

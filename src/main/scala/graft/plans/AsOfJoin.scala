@@ -352,9 +352,9 @@ case class AsOfJoinExec(
 
 object AsOfJoin {
 
-  /** Idempotent runtime registration — works on driver-built sessions
-    * (no builder access needed); `GraftExtensions` is the
-    * SparkSessionExtensions route for builder-owned sessions. */
+  /** Adds [[AsOfStrategy]] to the session's planner strategies when
+    * absent. Sessions get it through [[graft.Tables.configure]], which
+    * states the install contract; [[asof]] installs nothing. */
   def register(spark: SparkSession): Unit = {
     val strategies = spark.sessionState.experimentalMethods.extraStrategies
     if (!strategies.contains(AsOfStrategy)) {
@@ -375,7 +375,6 @@ object AsOfJoin {
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String, rightTie: String): DataFrame = {
     val spark = left.sparkSession
-    register(spark)
     val lp = Bridge.analyzedPlan(left)
     val rp = Bridge.analyzedPlan(right)
     def attr(p: LogicalPlan, n: String): Attribute =
@@ -394,15 +393,5 @@ object AsOfJoin {
     Bridge.ofRows(spark, AsOfJoinPlan(lp, rp,
       attr(lp, leftKey), attr(rp, rightKey),
       attr(lp, leftTime), attr(rp, rightTime), attr(rp, rightTie)))
-  }
-}
-
-/** SparkSessionExtensions entry point: a session builder's
-  * `withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => AsOfStrategy)
-    e.injectOptimizerRule(_ => ToleranceJoinRule)
   }
 }

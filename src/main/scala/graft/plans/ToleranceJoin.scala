@@ -52,10 +52,8 @@ import org.apache.spark.sql.types.LongType
   * fixed-point batch: the rewritten join contains a cross-side equi
   * conjunct (the bucket), so it can never match again.
   *
-  * Registration mirrors AsOfJoin: [[ToleranceJoinRule.register]] for
-  * driver-built sessions (idempotent, via experimentalMethods), or
-  * `spark.sql.extensions=graft.plans.GraftExtensions` at build time
-  * (injectOptimizerRule).
+  * [[graft.Tables.configure]] installs it into every session that
+  * loads a table ([[ToleranceJoinRule.register]]).
   */
 object ToleranceJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -127,8 +125,7 @@ object ToleranceJoinRule extends Rule[LogicalPlan] with PredicateHelper {
       Project(j.output, newJoin)
   }
 
-  /** Idempotent runtime registration for driver-built sessions (the
-    * AsOfJoin.register pattern). */
+  /** Adds this rule to the session's extra optimizations when absent. */
   def register(spark: SparkSession): Unit = {
     val rules = spark.experimental.extraOptimizations
     if (!rules.contains(ToleranceJoinRule)) {

@@ -53,8 +53,7 @@ object EventStreams {
     * timestamps both land on TimestampType(µs).
     */
   def readEventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.configure(spark)
-    val fileSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val fileSchema = Tables.load(spark, sfDir, "events").schema
     Tables.normalizeEventTs(
       spark.readStream.schema(fileSchema).parquet(s"$sfDir/events.parque[t]"))
   }

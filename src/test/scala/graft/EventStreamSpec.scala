@@ -374,7 +374,6 @@ class EventStreamSpec extends SparkSpec {
     // boundary via the StateStore, not restart
     import spark.implicits._
     val dir = tmpDir("graft_cdc_multi")
-    Tables.configure(spark)
     val ev = rawNsEvents
     val evs = EventStreams.toFoldEvents(batchEvents).collect()
     val mid = (evs.map(_.ts_us).min + evs.map(_.ts_us).max) / 2
@@ -731,7 +730,6 @@ class EventStreamSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.StatefulProcessors
     val dir = tmpDir("graft_sess_timer")
-    Tables.configure(spark)
     val ev = rawNsEvents
     ev.write.mode("overwrite").parquet(s"$dir/in")
     val raw = spark.readStream.schema(EventStreams.rawSchema).parquet(s"$dir/in")
@@ -772,7 +770,6 @@ class EventStreamSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.StatefulProcessors
     val dir = tmpDir("graft_profile")
-    Tables.configure(spark)
     val evs = EventStreams.toFoldEvents(batchEvents).collect().toSeq
     // split by TIME so cross-batch arrival order equals log order and
     // the bounded error buffer's contents are deterministic
@@ -812,7 +809,6 @@ class EventStreamSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.StatefulProcessors
     val dir = tmpDir("graft_bootstrap")
-    Tables.configure(spark)
     val ev = rawNsEvents
     // snapshot = batch fold of the log's first half (the materialized
     // table a cdc_apply/fold job wrote yesterday)...
@@ -1570,7 +1566,6 @@ class EventStreamSpec extends SparkSpec {
   test("session timers resume from checkpointed sessions AND timers across a restart") {
     import graft.streaming.StatefulProcessors
     val dir = tmpDir("graft_sess_replay")
-    Tables.configure(spark)
     val ev = rawNsEvents
     val b = ev.agg(min("ts"), max("ts")).head()
     val midNs = (b.getLong(0) + b.getLong(1)) / 2
@@ -1628,7 +1623,6 @@ class EventStreamSpec extends SparkSpec {
   test("profile resumes MapState counters and the bounded error buffer across a restart") {
     import graft.streaming.StatefulProcessors
     val dir = tmpDir("graft_profile_replay")
-    Tables.configure(spark)
     val evs = EventStreams.toFoldEvents(batchEvents).collect().toSeq
     val mid = (evs.map(_.ts_us).min + evs.map(_.ts_us).max) / 2
     val ev = rawNsEvents

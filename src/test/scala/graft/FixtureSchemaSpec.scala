@@ -23,11 +23,8 @@ class FixtureSchemaSpec extends SparkSpec {
   private def isTimestamp(dt: DataType): Boolean =
     dt == TimestampType || dt == TimestampNTZType
 
-  private def fieldTypes(table: String): Map[String, DataType] = {
-    Tables.configure(spark)
-    spark.read.parquet(s"$sf001/$table.parquet")
-      .schema.fields.map(f => f.name -> f.dataType).toMap
-  }
+  private def fieldTypes(table: String): Map[String, DataType] =
+    Tables.load(spark, sf001, table).schema.fields.map(f => f.name -> f.dataType).toMap
 
   private def pin(table: String, expect: (String, DataType => Boolean)*): Unit = {
     val actual = fieldTypes(table)

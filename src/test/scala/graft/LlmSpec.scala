@@ -18,7 +18,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("seeded hash: deterministic, seed-sensitive, codegen==interpreted") {
-    SeededFnvHash.register(spark)
     val df = Tables.documents(spark, sf001).limit(50)
       .select(col("doc_id"),
         call_function("graft_seeded_hash", col("text"), lit(1L)).as("h1"),
@@ -121,7 +120,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("near-dedup: exact duplicates and small edits are caught; disjoint docs are not") {
-    SeededFnvHash.register(spark)
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lambda mu nu xi omicron pi rho sigma tau upsilon"
     val edited = base.replace("gamma", "zz1") // 1-token edit
@@ -181,7 +179,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("near-dedup is idempotent on an already-deduped corpus, short docs included") {
-    SeededFnvHash.register(spark)
     val df = docsDf(Seq(
       1L -> "alpha beta gamma delta epsilon zeta eta theta",
       2L -> "one two three four five six seven eight",
@@ -206,7 +203,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("simhash: identical docs at hamming 0, small edits within radius, disjoint docs out") {
-    SeededFnvHash.register(spark)
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val edited = base.replace("tok7", "zz") // 1-token edit of 40
     val disjoint = (1 to 40).map(i => s"other$i").mkString(" ")
@@ -650,7 +646,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("char-ngram kernel: matches the declarative rendering, handles edges") {
-    graft.functions.VectorKernels.register(spark)
     import spark.implicits._
     val df = Seq("hello world", "ab", "abc", "", "日本語テスト", "xy z")
       .toDF("s")
@@ -679,7 +674,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("shingles_sorted kernel equals array_sort(array_distinct(graft_shingles)), edges included") {
-    graft.functions.VectorKernels.register(spark)
     import spark.implicits._
     // corpus rows + crafted edges: exactly-n tokens, heavy duplicate
     // shingles, all-identical tokens
@@ -736,7 +730,6 @@ class LlmSpec extends SparkSpec {
       val fast = LlmOps.jaccardPairs(docs, tau)
         .orderBy("doc_a", "doc_b").collect().toSeq
       val toks = split(lower(trim(regexp_replace(col("text"), "\\s+", " "))), " ")
-      graft.functions.VectorKernels.register(spark)
       val sets = docs.select(col("doc_id"),
         array_distinct(when(size(toks) >= 3,
           call_function("graft_shingles", toks, lit(3)))
@@ -755,7 +748,6 @@ class LlmSpec extends SparkSpec {
   }
 
   test("quant8: codes bounded by ±127, reconstruction error bounded by scale/2") {
-    graft.functions.VectorKernels.register(spark)
     val rows = SparkEntry.queries("llm_vector_quant")(spark, sf001).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

@@ -46,6 +46,7 @@ class MemoSpec extends SparkSpec {
 
   test("memo keys on its input frames: different docs each get their own pairs") {
     val s = spark.newSession()
+    Tables.configure(s) // the helpers below run graft functions on frames built here
     import s.implicits._
     val fox = "the quick brown fox jumps over the lazy dog near the river bank"
     val lorem = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do eiusmod"
@@ -251,6 +252,18 @@ class MemoSpec extends SparkSpec {
     val hits = srcMainHits((file, line) => line.contains("queries_part") ||
       (file != "Harness.scala" && (line.contains("SparkSession.builder") ||
         line.contains("sys.env.getOrElse(\"SPARK_GRAFT_CPUS\""))))
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("src/main installs graft only in Tables.configure: no per-call function or rule registration") {
+    val calls = Seq("VectorKernels.register(", "SeededFnvHash.register(",
+      "ToleranceJoinRule.register(", "AsOfJoin.register(", "configure(")
+    val hits = srcMainHits((file, line) =>
+      (line.contains("createOrReplaceTempFunction") &&
+        file != "VectorExprs.scala" && file != "SeededFnvHash.scala") ||
+      ((line.contains("extraStrategies") || line.contains("extraOptimizations")) &&
+        file != "AsOfJoin.scala" && file != "ToleranceJoin.scala") ||
+      (calls.exists(line.contains) && file != "Tables.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

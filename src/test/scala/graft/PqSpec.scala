@@ -14,7 +14,6 @@ class PqSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_best_centroid_l2 matches a Scala argmin on random inputs") {
-    graft.functions.VectorKernels.register(spark)
     val vec = Gen.listOfN(4, Gen.chooseNum(-5.0, 5.0))
     val gen = Gen.zip(Gen.listOfN(20, vec), Gen.listOfN(5, vec))
     val r = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(10),

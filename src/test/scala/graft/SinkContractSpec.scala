@@ -113,7 +113,6 @@ class SinkContractSpec extends SparkSpec {
 
   test("routed fan-out: each subscriber receives exactly its filtered/projected slice") {
     val dir = tmpDir("graft_sink_routed")
-    Tables.configure(spark)
     val clicks = new MemorySink("clicks")
     val purchases = new MemorySink("purchases")
     val routes = Seq(
@@ -143,7 +142,6 @@ class SinkContractSpec extends SparkSpec {
 
   test("fan-out through the trait: heterogeneous sinks see identical batches") {
     val dir = tmpDir("graft_sink_fanout")
-    Tables.configure(spark)
     val mem = new MemorySink("mem")
     val sinks: Seq[Sink] = Seq(new ParquetDirSink(s"$dir/pq"), mem)
     val stream = EventStreams.readEventStream(spark, sf001)

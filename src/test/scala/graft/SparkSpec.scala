@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local[4] session for every suite (spark_guide.md:177-190). */
+/** One shared local[4] session for every suite (spark_guide.md:177-190),
+  * with graft installed once ([[Tables.configure]]) so specs may call
+  * helpers on frames they build themselves. */
 object TestSession {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -15,6 +17,7 @@ object TestSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    Tables.configure(s)
     s
   }
 }
